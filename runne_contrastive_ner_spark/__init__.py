@@ -9,13 +9,17 @@ functions/   pure-Python + numpy kernels that run *inside* pandas UDFs
              (text normalization, sentenization, offset-exact tokenization,
              constrained greedy span decoding, span embeddings, pluggable scorer)
 sources/     scans & sinks: RuNNE JSONL, TableIO (Iceberg with Parquet fallback),
-             deterministic synthetic transcript generation
-operators/   DataFrame-level operators: mention detection, predicate induction,
-             entity linking, connected components, triple materialization,
-             dedup family, similarity search, text analysis, relational ops
-plans/       staged pipeline with per-stage manifests (lineage + metrics) and
-             checkpointed resume
-streaming/   incremental / checkpointed-batch execution helpers
+             N-Triples export, the REST recognizer, deterministic transcript
+             derivation and synthesis
+operators/   DataFrame-level operators: mention detection, entity linking,
+             connected components, predicate induction, graph analytics,
+             training-set assembly
+plans/       staged batch build (run_pipeline) with per-stage manifests
+             (lineage + metrics) and checkpointed resume
+streaming/   tail ingest: incremental KG fold, analytics refresh, streaming
+             mention scan (driven by jobs/run_streaming_pipeline.py)
+oracle_sql   independent DuckDB formulations of the KG outputs, checked
+             against the engine by tests/test_kg_oracles.py
 
 Everything is DataFrame + pandas/Arrow UDFs: no RDDs, no per-row Python UDFs,
 no custom Catalyst rules (see SURVEY.md §7.0).

@@ -57,16 +57,6 @@ def cooccurrence_edges(triples: DataFrame) -> DataFrame:
 
 SMALL_GRAPH_EDGES = 100_000
 
-# audit hook: tools/explain_audit.py sets this True so PLANS.md records the
-# DISTRIBUTED plans (the 100 TB shapes) rather than the driver fast path the
-# tiny audit corpus would otherwise take; runtime code never touches it
-FORCE_DISTRIBUTED = False
-
-
-def _effective_small(small_graph_edges: int) -> int:
-    return 0 if FORCE_DISTRIBUTED else small_graph_edges
-
-
 # test-observability hook: inner peel rounds executed by the last
 # DISTRIBUTED k_core_numbers call (tests assert the degeneracy-derived
 # bound on deep graphs); runtime code never reads it
@@ -131,7 +121,7 @@ def pagerank(
     # (same rationale as components.py's checkpoint cadence)
     nbrs = nbrs.localCheckpoint(eager=True)
     n_edges = nbrs.count()  # cheap: counts the checkpointed RDD
-    if n_edges <= _effective_small(small_graph_edges):
+    if n_edges <= small_graph_edges:
         edges = [(r[0], r[1]) for r in nbrs.collect()]  # bounded by contract
         pr = _pagerank_local(edges, iterations, damping_pct, scale)
         spark = nbrs.sparkSession
@@ -210,7 +200,7 @@ def triangle_counts(
     equal by construction; asserted in tests), larger graphs the join form.
     """
     nbrs = nbrs.localCheckpoint(eager=True)
-    if nbrs.count() <= _effective_small(small_graph_edges):
+    if nbrs.count() <= small_graph_edges:
         spark = nbrs.sparkSession
         counts = _triangles_local([(r[0], r[1]) for r in nbrs.collect()])
         if not counts:
@@ -296,7 +286,7 @@ def label_propagation(
     from pyspark.sql import Window
 
     nbrs = nbrs.localCheckpoint(eager=True)
-    if nbrs.count() <= _effective_small(small_graph_edges):
+    if nbrs.count() <= small_graph_edges:
         spark = nbrs.sparkSession
         lab_map = _label_prop_local(
             [(r[0], r[1]) for r in nbrs.collect()], iterations
@@ -397,7 +387,7 @@ def k_core_numbers(
     global _LAST_PEEL_ROUNDS
     nbrs = nbrs.localCheckpoint(eager=True)
     spark = nbrs.sparkSession
-    if nbrs.count() <= _effective_small(small_graph_edges):
+    if nbrs.count() <= small_graph_edges:
         core = _kcore_local([(r[0], r[1]) for r in nbrs.collect()])
         if not core:
             return spark.createDataFrame([], "src string, core long")

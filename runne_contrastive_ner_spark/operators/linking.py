@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.embed import hash_embedding
-from ..functions.hashing import spark_md5_int_sql
+from ..functions.hashing import md5_int, spark_md5_int_sql
 from ..functions.vocab import TEST_ALIASES
 from .components import connected_components
 
@@ -92,6 +92,103 @@ def alias_edges(spark: SparkSession, nodes: DataFrame, aliases: list[tuple[str, 
     )
 
 
+# --- multi-table sign-LSH candidate generation ------------------------------
+# Shared by both embedding-edge sources below. The defaults (24 tables of 2
+# planes over 64-dim vectors) suit low-threshold recall on dense float
+# embeddings; the linking callers pass their own table/plane/dim settings.
+
+DIM = 64
+N_TABLES = 24
+PLANES_PER_TABLE = 2
+
+
+def _table_plane_vector(t: int, p: int, dim: int = DIM) -> list[float]:
+    """Deterministic pseudo-random hyperplane component vector in [-1, 1):
+    md5-derived per (table, plane, dim) — precomputed driver-side: a plane
+    is a CONSTANT, so it belongs in the plan as a literal, not as a per-row
+    SQL md5 per dimension."""
+    return [((md5_int(f"t{t}p{p}d{d}") % 2001) - 1000) / 1000.0 for d in range(dim)]
+
+
+def multitable_lsh_buckets(
+    emb: DataFrame,
+    n_tables: int = N_TABLES,
+    n_planes: int = PLANES_PER_TABLE,
+    dim: int = DIM,
+) -> DataFrame:
+    """(vec_id, tbl, bucket): ``n_tables`` independent sign-LSH tables of
+    ``n_planes`` hyperplanes each — the multi-probe recall knob for
+    candidate generation. All buckets for a vector are computed in ONE pass
+    over the embedding column (plane vectors are plan literals), then
+    posexploded; the vector itself is NOT carried through the explode, so
+    shuffle volume is O(n_tables) longs per vector, not O(n_tables × dim)."""
+    planes_lit = (
+        "array("
+        + ",".join(
+            "array(" + ",".join(repr(x) for x in _table_plane_vector(t, p, dim)) + ")"
+            for t in range(n_tables)
+            for p in range(n_planes)
+        )
+        + ")"
+    )
+    buckets = F.expr(
+        f"""
+        transform(sequence(0, {n_tables - 1}), t ->
+          aggregate(sequence(0, {n_planes - 1}), 0L, (acc, p) ->
+            acc + IF(
+              aggregate(zip_with(v, element_at({planes_lit}, t * {n_planes} + p + 1),
+                                 (x, y) -> x * y), 0D, (s, z) -> s + z) >= 0,
+              shiftleft(1L, p), 0L)))
+        """
+    )
+    return emb.select(
+        "vec_id", F.posexplode(buckets).alias("tbl", "bucket")
+    )
+
+
+def lsh_candidate_pairs(
+    emb: DataFrame,
+    n_tables: int = N_TABLES,
+    n_planes: int = PLANES_PER_TABLE,
+    dim: int = DIM,
+    probe_bits: int = 0,
+) -> DataFrame:
+    """(vec_a, vec_b) distinct candidate pairs sharing a bucket in ANY table
+    — pure equi-join on (tbl, bucket); no quadratic stage.
+
+    ``probe_bits=1`` enables multi-probe: one side additionally probes every
+    bucket at Hamming distance 1 (flip each of the ``n_planes`` sign bits),
+    so a true pair survives a table when AT MOST ONE plane disagrees —
+    recall per table rises from p^k to p^k + k·p^(k-1)(1-p) at the cost of
+    (k+1)× probe rows on one join side. This is the standard recall knob
+    that lets k stay LARGE (small, well-separated buckets — the only regime
+    that scales) without paying for it in missed pairs."""
+    bk = multitable_lsh_buckets(emb, n_tables, n_planes, dim)
+    if probe_bits == 0:
+        probed = bk
+    elif probe_bits == 1:
+        flips = ",".join(f"bucket ^ {1 << i}L" for i in range(n_planes))
+        probed = bk.select(
+            "vec_id",
+            "tbl",
+            F.explode(F.expr(f"array(bucket, {flips})")).alias("bucket"),
+        )
+    else:
+        raise ValueError("probe_bits must be 0 or 1")
+    x = probed.alias("x")
+    y = bk.alias("y")
+    return (
+        x.join(
+            y,
+            (F.col("x.tbl") == F.col("y.tbl"))
+            & (F.col("x.bucket") == F.col("y.bucket"))
+            & (F.col("x.vec_id") < F.col("y.vec_id")),
+        )
+        .select(F.col("x.vec_id").alias("vec_a"), F.col("y.vec_id").alias("vec_b"))
+        .distinct()
+    )
+
+
 def embedding_edges(
     nodes: DataFrame,
     threshold: float = 0.9,
@@ -105,10 +202,10 @@ def embedding_edges(
 
     ``method="lsh"`` (default, the 100×-shaped path): candidates from
     multi-table sign-LSH over the surface embeddings (equi-join on (table,
-    bucket), similarity.lsh_candidate_pairs) + exact dot re-rank. At the
+    bucket), lsh_candidate_pairs) + exact dot re-rank. At the
     linking threshold (0.9 → per-plane collision prob ≈ 0.86) 4 planes × 8
     tables give miss probability ≈ 3e-6 per true pair — recall 1.0 is
-    property-tested against the all-pairs form (tests/test_dedup_scale.py).
+    property-tested against the all-pairs form (tests/test_linking_embedding.py).
 
     ``method="exact"``: the all-pairs baseline, kept for tests."""
 
@@ -122,8 +219,6 @@ def embedding_edges(
     if method == "exact":
         pairs = left.join(right, F.col("src") < F.col("dst"))
     elif method == "lsh":
-        from .similarity import lsh_candidate_pairs
-
         cand = lsh_candidate_pairs(
             emb.select(F.col("surface_norm").alias("vec_id"), F.col("vec").alias("v")),
             n_tables=n_tables,
@@ -195,7 +290,7 @@ def bigram_embedding_edges(
     dropped (VERDICT r4 item 4).
 
     ``"lsh"`` (the dictionary-scale path): multi-table sign-LSH candidates
-    (similarity.lsh_candidate_pairs — a pure (table, bucket) equi-join,
+    (lsh_candidate_pairs — a pure (table, bucket) equi-join,
     fan-out bounded by bucket population, no per-bigram hot key), followed
     by the IDENTICAL exact integer dot re-rank. Two adaptations make
     sign-LSH actually work on bigram count vectors: (a) the vectors are
@@ -291,8 +386,6 @@ def bigram_embedding_edges(
             .distinct()
         )
     elif candidates == "lsh":
-        from .similarity import lsh_candidate_pairs
-
         # center before sign-hashing: per-dimension means from EXACT integer
         # sums (one single-row aggregate, a bounded scalar collect), so the
         # centered vectors — and every downstream sign — are deterministic
@@ -441,8 +534,7 @@ def canonicalize(
     ``persist_registry``: every DataFrame this call persists is appended, so
     the caller can ``unpersist()`` them when the linked lineage is no longer
     needed (callers composing many canonicalize() lineages in one session
-    would otherwise accumulate cached copies of the expensive mention scan;
-    __spark_entry__ memoizes ONE lineage per sf_dir and releases the old one).
+    would otherwise accumulate cached copies of the expensive mention scan).
     """
     # the mention stage is the expensive pandas-UDF scan; it is referenced by
     # nodes, edges, AND the final linked join — persist so downstream actions

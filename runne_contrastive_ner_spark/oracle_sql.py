@@ -1,9 +1,9 @@
-"""DuckDB oracle SQL for every oracle-checkable query in __spark_entry__.
+"""DuckDB oracle SQL for the KG outputs and the training-set builders.
 
-Each SQL string computes, on DuckDB over the driver-registered parquet views,
-exactly what the corresponding Spark operator computes — same column names,
-same value semantics (decimal accumulation for money, md5-derived hashing,
-identical tie-breaking). The KG oracles derive the transcripts table from
+Each SQL string computes, on DuckDB over the sf parquet tables registered as
+views, exactly what the corresponding Spark composition in
+tests/test_kg_oracles.py computes — same column names, same value semantics
+(md5-derived hashing, integer arithmetic, identical tie-breaking). The KG oracles derive the transcripts table from
 ``documents`` with the same arithmetic the engine uses
 (sources/transcripts.py) and re-implement mention detection as substring
 search + island merging, canonicalization as a recursive-CTE transitive
@@ -23,861 +23,13 @@ from .functions.vocab import (
 from .sources.transcripts import DUCKDB_TRANSCRIPTS_SQL
 
 # ---------------------------------------------------------------------------
-# relational operators
-# ---------------------------------------------------------------------------
-
-RELATIONAL: dict[str, str] = {
-    "rel_event_type_freqs": """
-        SELECT event_type, count(*)::BIGINT AS freq
-        FROM events GROUP BY event_type
-        ORDER BY freq DESC, event_type
-    """,
-    "rel_min_freq_gate": """
-        SELECT min(freq)::BIGINT AS min_freq, max(freq)::BIGINT AS max_freq,
-               sum(freq)::BIGINT AS total, count(*)::BIGINT AS n_types
-        FROM (SELECT count(*) AS freq FROM events GROUP BY event_type)
-    """,
-    "rel_pricing_summary": """
-        SELECT l_returnflag, l_linestatus,
-               sum(l_quantity::DECIMAL(18,2))::DOUBLE AS sum_qty,
-               sum(l_extendedprice::DECIMAL(18,2))::DOUBLE AS sum_base_price,
-               sum((l_extendedprice::DECIMAL(18,2)
-                    * (1::DECIMAL(18,2) - l_discount::DECIMAL(18,2)))::DECIMAL(22,4))::DOUBLE
-                 AS sum_disc_price,
-               round(avg(l_quantity::DECIMAL(18,2)), 4)::DOUBLE AS avg_qty,
-               count(*)::BIGINT AS count_order
-        FROM lineitem
-        WHERE l_shipdate < TIMESTAMP '1998-09-01'
-        GROUP BY l_returnflag, l_linestatus
-        ORDER BY l_returnflag, l_linestatus
-    """,
-    "rel_top_orders_per_priority": """
-        SELECT o_orderpriority, rank::BIGINT AS rank, o_orderkey::BIGINT AS o_orderkey,
-               o_totalprice::DECIMAL(18,2)::DOUBLE AS o_totalprice
-        FROM (
-          SELECT o_orderpriority, o_orderkey, o_totalprice,
-                 row_number() OVER (PARTITION BY o_orderpriority
-                                    ORDER BY o_totalprice DESC, o_orderkey) AS rank
-          FROM orders
-        ) WHERE rank <= 3
-    """,
-    "rel_stratified_hash_split": """
-        SELECT CASE WHEN ('0x' || substr(md5(o_orderkey::VARCHAR), 1, 15))::BIGINT % 100 < 85
-                    THEN 'train' ELSE 'val' END AS split,
-               c_mktsegment, count(*)::BIGINT AS n
-        FROM orders JOIN customer ON o_custkey = c_custkey
-        GROUP BY 1, 2 ORDER BY 1, 2
-    """,
-    "rel_token_array_dedup_sort": """
-        SELECT doc_id::BIGINT AS doc_id,
-               len(toks)::BIGINT AS n_distinct,
-               array_to_string(toks[1:5], ',') AS first5
-        FROM (SELECT doc_id, list_sort(list_distinct(string_split(text, ' '))) AS toks
-              FROM documents)
-    """,
-    "rel_symmetric_pair_dedup": """
-        SELECT DISTINCT least(a.n_name, b.n_name) AS "left",
-               greatest(a.n_name, b.n_name) AS "right",
-               a.n_regionkey::BIGINT AS regionkey
-        FROM nation a JOIN nation b
-          ON a.n_regionkey = b.n_regionkey AND a.n_name <> b.n_name
-        ORDER BY 1, 2
-    """,
-    "rel_seeded_sample_rollup": """
-        SELECT o_orderpriority, count(*)::BIGINT AS n,
-               sum(o_totalprice::DECIMAL(18,2))::DOUBLE AS sum_price
-        FROM (
-          SELECT * FROM orders
-          ORDER BY ('0x' || substr(md5(o_orderkey::VARCHAR), 1, 15))::BIGINT
-          LIMIT 1000
-        ) GROUP BY 1 ORDER BY 1
-    """,
-    "rel_region_order_rollup": """
-        SELECT r_name, count(*)::BIGINT AS n_orders,
-               sum(o_totalprice::DECIMAL(18,2))::DOUBLE AS sum_price
-        FROM orders
-        JOIN customer ON o_custkey = c_custkey
-        JOIN nation ON c_nationkey = n_nationkey
-        JOIN region ON n_regionkey = r_regionkey
-        GROUP BY r_name ORDER BY r_name
-    """,
-    "rel_events_within_hour_pairs": """
-        SELECT a.event_type AS type_a, b.event_type AS type_b, count(*)::BIGINT AS n_pairs
-        FROM events a JOIN events b
-          ON a.user_id = b.user_id
-         AND b.ts > a.ts AND b.ts <= a.ts + INTERVAL 1 HOUR
-        GROUP BY 1, 2 ORDER BY 1, 2
-    """,
-    "rel_event_transitions": """
-        SELECT prev_type, event_type, count(*)::BIGINT AS n
-        FROM (SELECT event_type,
-                     lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                       AS prev_type
-              FROM events)
-        WHERE prev_type IS NOT NULL
-        GROUP BY 1, 2 ORDER BY 1, 2
-    """,
-    "rel_sessionization": """
-        WITH marked AS (
-          SELECT user_id, ts, event_id,
-                 CASE WHEN lag(ts) OVER w IS NULL
-                        OR floor(epoch(ts))::BIGINT - floor(epoch(lag(ts) OVER w))::BIGINT > 1800
-                      THEN 1 ELSE 0 END AS new_session
-          FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        ), numbered AS (
-          SELECT *, sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                 AS session_no
-          FROM marked
-        ), sessions AS (
-          SELECT user_id, session_no, count(*) AS n_events,
-                 max(floor(epoch(ts))::BIGINT) - min(floor(epoch(ts))::BIGINT) AS span_sec
-          FROM numbered GROUP BY user_id, session_no
-        )
-        SELECT count(*)::BIGINT AS n_sessions,
-               round(avg(n_events), 4)::DOUBLE AS avg_events,
-               round(avg(span_sec), 4)::DOUBLE AS avg_span_sec,
-               max(n_events)::BIGINT AS max_events
-        FROM sessions
-    """,
-}
-
-# ---------------------------------------------------------------------------
-# dedup / similarity / text-analysis oracles
-# ---------------------------------------------------------------------------
-
-_SHINGLES_CTE = """
-toks AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-sh AS (
-  SELECT DISTINCT doc_id, shingle
-  FROM (SELECT doc_id,
-               unnest([array_to_string(tk[i:i+2], ' ') FOR i IN range(1, len(tk) - 1)])
-                 AS shingle
-        FROM toks)
-  WHERE shingle != ''
-)
-"""
-
-# minhash signature + banding CTEs shared by the LSH-candidate and
-# dedup-cluster oracles (universal-hash constants mirrored from
-# operators/dedup._minhash_consts — portable-hash contract)
-_MINHASH_BAND_CTES = """
-        hashed AS (SELECT doc_id, ('0x' || substr(md5(shingle), 1, 8))::BIGINT AS h
-                   FROM sh),
-        sig AS (
-          SELECT doc_id, seed,
-                 min(([300573,510655,73578,495690,498781,542380,852897,668282,308840,250277,325232,239434,307330,243405,98058,35422][seed::INT + 1] * h + [356273078,466755145,267672130,546645653,574012503,995538962,179374004,502315376,583196615,559567553,794485247,132977063,964342133,124030894,504111746,517523273][seed::INT + 1])
-                     % 1000000007) AS minhash
-          FROM hashed, unnest(range(0, 16)) AS s(seed)
-          GROUP BY doc_id, seed
-        ),
-        banded AS (
-          SELECT doc_id, seed // 4 AS band,
-                 md5((seed // 4)::VARCHAR || ':' ||
-                     (min(minhash) FILTER (WHERE seed % 4 = 0))::VARCHAR || ':' ||
-                     (min(minhash) FILTER (WHERE seed % 4 = 1))::VARCHAR || ':' ||
-                     (min(minhash) FILTER (WHERE seed % 4 = 2))::VARCHAR || ':' ||
-                     (min(minhash) FILTER (WHERE seed % 4 = 3))::VARCHAR)
-                   AS band_key
-          FROM sig GROUP BY doc_id, seed // 4
-        )
-"""
-
-DEDUP: dict[str, str] = {
-    "dd_exact_dup_stats": """
-        SELECT count(*)::BIGINT AS n_docs,
-               count(DISTINCT md5(text))::BIGINT AS n_unique,
-               (count(*) - count(DISTINCT md5(text)))::BIGINT AS n_dup_docs
-        FROM documents
-    """,
-    "dd_ngram_jaccard_pairs": f"""
-        WITH {_SHINGLES_CTE},
-        rare AS (SELECT shingle FROM sh GROUP BY shingle HAVING count(*) <= 16),
-        kept AS (SELECT sh.doc_id, sh.shingle FROM sh JOIN rare USING (shingle)),
-        sizes AS (SELECT doc_id, count(*) AS n_sh FROM kept GROUP BY doc_id),
-        common AS (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS common
-          FROM kept a JOIN kept b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-          GROUP BY 1, 2
-        )
-        SELECT doc_a::BIGINT AS doc_a, doc_b::BIGINT AS doc_b,
-               round(common / (sa.n_sh + sb.n_sh - common), 6)::DOUBLE AS jaccard,
-               common::BIGINT AS common
-        FROM common
-        JOIN sizes sa ON sa.doc_id = doc_a
-        JOIN sizes sb ON sb.doc_id = doc_b
-        WHERE common / (sa.n_sh + sb.n_sh - common) >= 0.12
-    """,
-    "dd_minhash_signatures": f"""
-        WITH {_SHINGLES_CTE},
-        hashed AS (SELECT doc_id, ('0x' || substr(md5(shingle), 1, 8))::BIGINT AS h
-                   FROM sh)
-        SELECT doc_id::BIGINT AS doc_id, seed::BIGINT AS seed,
-               min(([300573,510655,73578,495690,498781,542380,852897,668282,308840,250277,325232,239434,307330,243405,98058,35422][seed::INT + 1] * h + [356273078,466755145,267672130,546645653,574012503,995538962,179374004,502315376,583196615,559567553,794485247,132977063,964342133,124030894,504111746,517523273][seed::INT + 1])
-                   % 1000000007) AS minhash
-        FROM hashed, unnest(range(0, 16)) AS s(seed)
-        GROUP BY doc_id, seed
-    """,
-    "dd_minhash_lsh_candidates": f"""
-        WITH {_SHINGLES_CTE},
-        {_MINHASH_BAND_CTES}
-        SELECT DISTINCT a.doc_id::BIGINT AS doc_a, b.doc_id::BIGINT AS doc_b
-        FROM banded a JOIN banded b
-          ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-    """,
-    # LSH candidates -> exact-Jaccard verify (candidates only) -> recursive
-    # transitive closure -> survivor = min doc id. Mirrors the engine's
-    # dedup_clusters composition with an independent closure formulation.
-    "dd_dedup_clusters": f"""
-        WITH RECURSIVE {_SHINGLES_CTE},
-        {_MINHASH_BAND_CTES},
-        cands AS (
-          SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-          FROM banded a JOIN banded b
-            ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-        ),
-        sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        common AS (
-          SELECT c.doc_a, c.doc_b, count(*) AS cmn
-          FROM cands c
-          JOIN sh sa ON sa.doc_id = c.doc_a
-          JOIN sh sb ON sb.doc_id = c.doc_b AND sb.shingle = sa.shingle
-          GROUP BY c.doc_a, c.doc_b
-        ),
-        verified AS (
-          SELECT co.doc_a, co.doc_b
-          FROM common co
-          JOIN sizes za ON za.doc_id = co.doc_a
-          JOIN sizes zb ON zb.doc_id = co.doc_b
-          WHERE co.cmn * 1.0 / (za.n + zb.n - co.cmn) >= 0.9
-        ),
-        vedges AS (SELECT doc_a AS src, doc_b AS dst FROM verified
-                   UNION SELECT doc_b, doc_a FROM verified),
-        reach AS (
-          SELECT src AS node, dst AS r FROM vedges
-          UNION
-          SELECT e2.src, r.r FROM vedges e2 JOIN reach r ON r.node = e2.dst
-        ),
-        canon AS (SELECT node, least(min(r), node) AS cluster_id
-                  FROM reach GROUP BY node),
-        csz AS (SELECT cluster_id, count(*)::BIGINT AS cluster_size
-                FROM canon GROUP BY cluster_id)
-        SELECT c.node::BIGINT AS doc_id, c.cluster_id::BIGINT AS cluster_id,
-               z.cluster_size, (c.node = c.cluster_id) AS is_survivor
-        FROM canon c JOIN csz z USING (cluster_id)
-    """,
-    "dd_simhash_values": """
-        WITH tok AS (
-          SELECT doc_id, tok, count(*) AS cnt
-          FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents)
-          WHERE tok != '' GROUP BY doc_id, tok
-        ),
-        hashed AS (SELECT *, ('0x' || substr(md5(tok), 1, 8))::BIGINT AS h FROM tok),
-        bits AS (
-          SELECT doc_id, b,
-                 sum((2 * ((floor(h / power(2, b))::BIGINT) % 2) - 1) * cnt) AS v
-          FROM hashed, unnest(range(0, 32)) AS u(b)
-          GROUP BY doc_id, b
-        )
-        SELECT doc_id::BIGINT AS doc_id,
-               sum(CASE WHEN v >= 0 THEN power(2, b)::BIGINT ELSE 0 END)::BIGINT AS simhash
-        FROM bits GROUP BY doc_id
-    """,
-    "dd_simhash_near_pairs": """
-        WITH tok AS (
-          SELECT doc_id, tok, count(*) AS cnt
-          FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents)
-          WHERE tok != '' GROUP BY doc_id, tok
-        ),
-        hashed AS (SELECT *, ('0x' || substr(md5(tok), 1, 8))::BIGINT AS h FROM tok),
-        bits AS (
-          SELECT doc_id, b,
-                 sum((2 * ((floor(h / power(2, b))::BIGINT) % 2) - 1) * cnt) AS v
-          FROM hashed, unnest(range(0, 32)) AS u(b)
-          GROUP BY doc_id, b
-        ),
-        sig AS (
-          SELECT doc_id,
-                 sum(CASE WHEN v >= 0 THEN power(2, b)::BIGINT ELSE 0 END)::BIGINT
-                   AS simhash
-          FROM bits GROUP BY doc_id
-        )
-        SELECT a.doc_id::BIGINT AS doc_a, b.doc_id::BIGINT AS doc_b,
-               bit_count(xor(a.simhash, b.simhash))::BIGINT AS hamming
-        FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-        WHERE bit_count(xor(a.simhash, b.simhash)) <= 6
-    """,
-    "dd_embedding_neardup_pairs": """
-        WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        pairs AS (
-          SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-                 list_sum([a.v[d] * b.v[d] FOR d IN range(1, 65)])
-                 / (sqrt(list_sum([a.v[d] * a.v[d] FOR d IN range(1, 65)]))
-                    * sqrt(list_sum([b.v[d] * b.v[d] FOR d IN range(1, 65)]))) AS cos
-          FROM e a JOIN e b ON a.vec_id < b.vec_id
-        )
-        SELECT vec_a::BIGINT AS vec_a, vec_b::BIGINT AS vec_b,
-               round(cos, 6)::DOUBLE AS cos
-        FROM pairs WHERE cos >= 0.3
-    """,
-}
-
-_DUCK_COS = (
-    "list_sum([a.va[d] * b.vb[d] FOR d IN range(1, 65)])"
-    " / (sqrt(list_sum([a.va[d] * a.va[d] FOR d IN range(1, 65)]))"
-    " * sqrt(list_sum([b.vb[d] * b.vb[d] FOR d IN range(1, 65)])))"
-)
-
-_DUCK_PLANE = (
-    "((('0x' || substr(md5('p' || p || 'd' || (d - 1)), 1, 15))::BIGINT % 2001) - 1000)"
-    " / 1000.0"
-)
-
-SIMILARITY: dict[str, str] = {
-    "sim_ann_bruteforce_topk": f"""
-        WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        scored AS (
-          SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-                 {_DUCK_COS.replace('a.va', 'a.v').replace('b.vb', 'b.v')} AS cos_raw
-          FROM e a JOIN e b ON a.vec_id < 10 AND a.vec_id <> b.vec_id
-        ),
-        ranked AS (
-          SELECT *, row_number() OVER (PARTITION BY query_id
-                                       ORDER BY cos_raw DESC, neighbor_id) AS rank
-          FROM scored
-        )
-        SELECT query_id::BIGINT AS query_id, rank::BIGINT AS rank,
-               neighbor_id::BIGINT AS neighbor_id, round(cos_raw, 6)::DOUBLE AS cos
-        FROM ranked WHERE rank <= 5
-    """,
-    "sim_lsh_buckets": f"""
-        WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)
-        SELECT vec_id::BIGINT AS vec_id,
-               list_sum([
-                 CASE WHEN list_sum([v[d] * ({_DUCK_PLANE}) FOR d IN range(1, 65)]) >= 0
-                      THEN power(2, p)::BIGINT ELSE 0 END
-                 FOR p IN range(0, 6)])::BIGINT AS bucket
-        FROM e
-    """,
-    "sim_ann_ivf_topk": """
-        WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        cents AS (
-          SELECT (vec_id // 13)::INT AS cell, v AS cv FROM e
-          WHERE vec_id % 13 = 0 AND vec_id < 13 * 8
-        ),
-        assign AS (
-          SELECT vec_id, cell FROM (
-            SELECT e.vec_id, c.cell,
-                   row_number() OVER (PARTITION BY e.vec_id
-                     ORDER BY list_sum([(e.v[d] - c.cv[d]) * (e.v[d] - c.cv[d]) FOR d IN range(1, 65)]), c.cell) AS rn
-            FROM e CROSS JOIN cents c
-          ) WHERE rn = 1
-        ),
-        probes AS (
-          SELECT query_id, va, cell FROM (
-            SELECT e.vec_id AS query_id, e.v AS va, c.cell,
-                   row_number() OVER (PARTITION BY e.vec_id
-                     ORDER BY list_sum([(e.v[d] - c.cv[d]) * (e.v[d] - c.cv[d]) FOR d IN range(1, 65)]), c.cell) AS prn
-            FROM e CROSS JOIN cents c
-            WHERE e.vec_id < 10
-          ) WHERE prn <= 2
-        ),
-        scored AS (
-          SELECT p.query_id, a.vec_id AS neighbor_id,
-                 list_sum([p.va[d] * e2.v[d] FOR d IN range(1, 65)]) / (sqrt(list_sum([p.va[d] * p.va[d] FOR d IN range(1, 65)])) * sqrt(list_sum([e2.v[d] * e2.v[d] FOR d IN range(1, 65)]))) AS cos_raw
-          FROM probes p
-          JOIN assign a ON a.cell = p.cell
-          JOIN e e2 ON e2.vec_id = a.vec_id
-          WHERE a.vec_id <> p.query_id
-        ),
-        ranked AS (
-          SELECT *, row_number() OVER (PARTITION BY query_id
-                                       ORDER BY cos_raw DESC, neighbor_id) AS rank
-          FROM scored
-        )
-        SELECT query_id::BIGINT AS query_id, rank::BIGINT AS rank,
-               neighbor_id::BIGINT AS neighbor_id, round(cos_raw, 6)::DOUBLE AS cos
-        FROM ranked WHERE rank <= 3
-    """,
-    # full Lloyd replay (2 unrolled iterations): assignment = argmin over
-    # current centroids, update = per-dim quantized-integer mean (mirrors
-    # the engine's determinism contract: round(v*1e6) BIGINT sums are
-    # order-independent, so both systems derive identical centroids), then
-    # the standard IVF probe/assign/re-rank over the trained cells.
-    "sim_ann_ivf_kmeans_topk": """
-        WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        vq AS (SELECT vec_id,
-                      [CAST(round(v[d] * 1000000) AS BIGINT) FOR d IN range(1, 65)] AS q
-               FROM e),
-        c0 AS (
-          SELECT (vec_id // 13)::INT AS cell, v AS cv FROM e
-          WHERE vec_id % 13 = 0 AND vec_id < 13 * 8
-        ),
-        a1 AS (
-          SELECT vec_id, cell FROM (
-            SELECT t.vec_id, c.cell,
-                   row_number() OVER (PARTITION BY t.vec_id
-                     ORDER BY list_sum([(t.v[d] - c.cv[d]) * (t.v[d] - c.cv[d]) FOR d IN range(1, 65)]), c.cell) AS rn
-            FROM e t CROSS JOIN c0 c
-          ) WHERE rn = 1
-        ),
-        u1 AS (
-          SELECT a.cell, t.d, sum(q.q[t.d])::BIGINT AS s, count(*)::BIGINT AS n
-          FROM a1 a JOIN vq q USING (vec_id), unnest(range(1, 65)) AS t(d)
-          GROUP BY a.cell, t.d
-        ),
-        u1c AS (SELECT cell, list(s / (1000000 * n) ORDER BY d) AS cv
-                FROM u1 GROUP BY cell),
-        c1 AS (SELECT c0.cell, coalesce(u.cv, c0.cv) AS cv
-               FROM c0 LEFT JOIN u1c u USING (cell)),
-        a2 AS (
-          SELECT vec_id, cell FROM (
-            SELECT t.vec_id, c.cell,
-                   row_number() OVER (PARTITION BY t.vec_id
-                     ORDER BY list_sum([(t.v[d] - c.cv[d]) * (t.v[d] - c.cv[d]) FOR d IN range(1, 65)]), c.cell) AS rn
-            FROM e t CROSS JOIN c1 c
-          ) WHERE rn = 1
-        ),
-        u2 AS (
-          SELECT a.cell, t.d, sum(q.q[t.d])::BIGINT AS s, count(*)::BIGINT AS n
-          FROM a2 a JOIN vq q USING (vec_id), unnest(range(1, 65)) AS t(d)
-          GROUP BY a.cell, t.d
-        ),
-        u2c AS (SELECT cell, list(s / (1000000 * n) ORDER BY d) AS cv
-                FROM u2 GROUP BY cell),
-        c2 AS (SELECT c1.cell, coalesce(u.cv, c1.cv) AS cv
-               FROM c1 LEFT JOIN u2c u USING (cell)),
-        assign AS (
-          SELECT vec_id, cell FROM (
-            SELECT t.vec_id, c.cell,
-                   row_number() OVER (PARTITION BY t.vec_id
-                     ORDER BY list_sum([(t.v[d] - c.cv[d]) * (t.v[d] - c.cv[d]) FOR d IN range(1, 65)]), c.cell) AS rn
-            FROM e t CROSS JOIN c2 c
-          ) WHERE rn = 1
-        ),
-        probes AS (
-          SELECT query_id, va, cell FROM (
-            SELECT e.vec_id AS query_id, e.v AS va, c.cell,
-                   row_number() OVER (PARTITION BY e.vec_id
-                     ORDER BY list_sum([(e.v[d] - c.cv[d]) * (e.v[d] - c.cv[d]) FOR d IN range(1, 65)]), c.cell) AS prn
-            FROM e CROSS JOIN c2 c
-            WHERE e.vec_id < 10
-          ) WHERE prn <= 4
-        ),
-        scored AS (
-          SELECT p.query_id, a.vec_id AS neighbor_id,
-                 list_sum([p.va[d] * e2.v[d] FOR d IN range(1, 65)]) / (sqrt(list_sum([p.va[d] * p.va[d] FOR d IN range(1, 65)])) * sqrt(list_sum([e2.v[d] * e2.v[d] FOR d IN range(1, 65)]))) AS cos_raw
-          FROM probes p
-          JOIN assign a ON a.cell = p.cell
-          JOIN e e2 ON e2.vec_id = a.vec_id
-          WHERE a.vec_id <> p.query_id
-        ),
-        ranked AS (
-          SELECT *, row_number() OVER (PARTITION BY query_id
-                                       ORDER BY cos_raw DESC, neighbor_id) AS rank
-          FROM scored
-        )
-        SELECT query_id::BIGINT AS query_id, rank::BIGINT AS rank,
-               neighbor_id::BIGINT AS neighbor_id, round(cos_raw, 6)::DOUBLE AS cos
-        FROM ranked WHERE rank <= 3
-    """,
-    "sim_ann_lsh_topk": f"""
-        WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        eb AS (
-          SELECT vec_id, v,
-                 list_sum([
-                   CASE WHEN list_sum([v[d] * ({_DUCK_PLANE}) FOR d IN range(1, 65)]) >= 0
-                        THEN power(2, p)::BIGINT ELSE 0 END
-                   FOR p IN range(0, 6)])::BIGINT AS bucket
-          FROM e
-        ),
-        scored AS (
-          SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-                 list_sum([a.v[d] * b.v[d] FOR d IN range(1, 65)])
-                 / (sqrt(list_sum([a.v[d] * a.v[d] FOR d IN range(1, 65)]))
-                    * sqrt(list_sum([b.v[d] * b.v[d] FOR d IN range(1, 65)]))) AS cos_raw
-          FROM eb a JOIN eb b ON a.bucket = b.bucket
-          WHERE a.vec_id < 10 AND a.vec_id <> b.vec_id
-        ),
-        ranked AS (
-          SELECT *, row_number() OVER (PARTITION BY query_id
-                                       ORDER BY cos_raw DESC, neighbor_id) AS rank
-          FROM scored
-        )
-        SELECT query_id::BIGINT AS query_id, rank::BIGINT AS rank,
-               neighbor_id::BIGINT AS neighbor_id, round(cos_raw, 6)::DOUBLE AS cos
-        FROM ranked WHERE rank <= 3
-    """,
-}
-
-TEXTSTATS: dict[str, str] = {
-    "ts_lang_id": """
-        WITH t AS (SELECT doc_id,
-                          list_filter(string_split(text, ' '), x -> x != '') AS toks
-                   FROM documents),
-        s AS (SELECT doc_id, len(toks) AS n_toks,
-                     len(list_filter(toks, x -> x IN ('the', 'a'))) AS n_stop
-              FROM t),
-        r AS (SELECT doc_id,
-                     CASE WHEN n_toks > 0 THEN n_stop / n_toks ELSE 0.0 END AS sr
-              FROM s)
-        SELECT doc_id::BIGINT AS doc_id, round(sr, 6)::DOUBLE AS stop_ratio,
-               CASE WHEN sr >= 0.05 THEN 'en' ELSE 'und' END AS pred_lang
-        FROM r
-    """,
-    "ts_quality_scores": """
-        WITH t AS (SELECT doc_id,
-                          list_filter(string_split(text, ' '), x -> x != '') AS toks
-                   FROM documents),
-        g AS (SELECT doc_id, toks,
-                     list_transform(range(1, len(toks)),
-                                    i -> toks[i] || ' ' || toks[i + 1]) AS g2,
-                     list_transform(range(1, len(toks) - 1),
-                                    i -> toks[i] || ' ' || toks[i + 1]
-                                            || ' ' || toks[i + 2]) AS g3
-              FROM t),
-        s AS (SELECT doc_id, len(toks) AS n_toks,
-                     len(list_distinct(toks)) AS n_distinct,
-                     len(list_filter(toks, x -> x IN ('the', 'a'))) AS n_stop,
-                     len(g2) AS n_bigrams,
-                     coalesce(list_max(list_transform(list_distinct(g2),
-                         x -> len(list_filter(g2, y -> y = x)))), 0) AS top_bigram_n,
-                     len(g3) - len(list_distinct(g3)) AS dup_trigram_n,
-                     len(g3) AS n_trigrams
-              FROM g)
-        SELECT doc_id::BIGINT AS doc_id, n_toks::BIGINT AS n_toks,
-               n_distinct::BIGINT AS n_distinct, n_stop::BIGINT AS n_stop,
-               top_bigram_n::BIGINT AS top_bigram_n,
-               dup_trigram_n::BIGINT AS dup_trigram_n,
-               (CASE WHEN n_bigrams > 0
-                     THEN round(top_bigram_n / n_bigrams, 6)
-                     ELSE 0.0 END)::DOUBLE AS top_bigram_frac,
-               (CASE WHEN n_trigrams > 0
-                     THEN round(dup_trigram_n / n_trigrams, 6)
-                     ELSE 0.0 END)::DOUBLE AS dup_trigram_frac,
-               round(0.4 * least(1.0, n_toks / 100.0)
-                     + 0.3 * (n_distinct / greatest(n_toks, 1))
-                     + 0.3 * (1 - n_stop / greatest(n_toks, 1)), 6)::DOUBLE AS quality
-        FROM s
-    """,
-    "ts_decontamination": """
-        WITH t AS (SELECT CAST(doc_id AS BIGINT) AS doc_id,
-                          list_filter(string_split(text, ' '), x -> x != '') AS toks
-                   FROM documents),
-        g AS (SELECT doc_id,
-                     list_distinct(list_transform(range(1, len(toks) - 2),
-                         i -> array_to_string(toks[i:i+3], ' '))) AS grams
-              FROM t),
-        bench AS (SELECT DISTINCT unnest(grams) AS gram FROM g
-                  WHERE doc_id % 97 = 0),
-        corp AS (SELECT doc_id, unnest(grams) AS gram FROM g
-                 WHERE doc_id % 97 != 0)
-        SELECT doc_id, count(*)::BIGINT AS n_shared_ngrams
-        FROM corp JOIN bench USING (gram)
-        GROUP BY doc_id
-    """,
-    "ts_token_stats_by_source": """
-        SELECT source, count(*)::BIGINT AS total_tokens,
-               count(DISTINCT tok)::BIGINT AS distinct_tokens,
-               count(DISTINCT doc_id)::BIGINT AS n_docs
-        FROM (SELECT source, doc_id, unnest(string_split(text, ' ')) AS tok
-              FROM documents)
-        WHERE tok != ''
-        GROUP BY source ORDER BY source
-    """,
-    "ts_bpe_token_counts": """
-        SELECT doc_id::BIGINT AS doc_id,
-               len(regexp_extract_all(text, '[a-z0-9]+|[^a-z0-9 ]'))::BIGINT
-                 AS n_bpe_tokens,
-               len(list_filter(string_split(text, ' '), t -> t != ''))::BIGINT
-                 AS n_ws_tokens
-        FROM documents
-    """,
-    "ts_pii_scrub_stats": """
-        SELECT doc_id::BIGINT AS doc_id,
-               len(regexp_extract_all(text,
-                   '[a-z0-9._%+-]+@[a-z0-9.-]+[.][a-z]{2,}'))::BIGINT AS n_email,
-               len(regexp_extract_all(text, 'https?://[^ ]+'))::BIGINT AS n_url,
-               len(regexp_extract_all(text,
-                   '[0-9]{3}-[0-9]{3,4}-[0-9]{4}'))::BIGINT AS n_phone,
-               length(text)::BIGINT AS orig_len,
-               length(regexp_replace(regexp_replace(regexp_replace(text,
-                   '[a-z0-9._%+-]+@[a-z0-9.-]+[.][a-z]{2,}', '<email>', 'g'),
-                   'https?://[^ ]+', '<url>', 'g'),
-                   '[0-9]{3}-[0-9]{3,4}-[0-9]{4}', '<phone>', 'g'))::BIGINT
-                 AS scrubbed_len
-        FROM documents
-    """,
-    "ts_chunk_windows": """
-        WITH t AS (SELECT doc_id,
-                          list_filter(string_split(text, ' '), x -> x != '') AS toks
-                   FROM documents),
-        w AS (
-          SELECT doc_id, toks,
-                 unnest(range(0, greatest(ceil((len(toks) - 32) / 24.0)::BIGINT, 0) + 1))
-                   AS w
-          FROM t WHERE len(toks) > 0
-        )
-        SELECT doc_id::BIGINT AS doc_id, w::BIGINT AS window_idx,
-               len(toks[w * 24 + 1 : w * 24 + 32])::BIGINT AS n_tokens,
-               array_to_string(toks[w * 24 + 1 : w * 24 + 32], ' ') AS chunk_text
-        FROM w
-    """,
-    "ts_doc_fingerprints": """
-        SELECT doc_id::BIGINT AS doc_id,
-               list_reduce(
-                 list_prepend(0::BIGINT,
-                   [ascii(substr(text, i, 1))::BIGINT
-                    FOR i IN range(1, least(length(text), 64) + 1)]),
-                 (a, b) -> (a * 31 + b) % 1000000007)::BIGINT AS fingerprint
-        FROM documents
-    """,
-}
-
-
-def _wordpiece_oracle() -> str:
-    """Independent replay of greedy longest-match-first WordPiece as a
-    recursive CTE: at each position, a LATERAL picks the longest vocab piece
-    matching the remaining suffix (continuations gated on pos>1); words whose
-    walk stalls before the end collapse to [UNK]. The mini vocab itself is a
-    MIRRORED constant (imported from operators.textstats, like the minhash
-    universal-hash constants) — the greedy-walk structure is independent."""
-    from .operators.textstats import WORDPIECE_MINI_VOCAB
-
-    vals = ", ".join(f"('{t}')" for t in WORDPIECE_MINI_VOCAB)
-    return f"""
-WITH RECURSIVE
-vocab(tok, core, is_cont) AS (
-  SELECT tok,
-         CASE WHEN tok LIKE '##%' THEN substr(tok, 3) ELSE tok END,
-         tok LIKE '##%'
-  FROM (VALUES {vals}) v(tok)
-),
-dw AS (
-  SELECT DISTINCT word
-  FROM (SELECT unnest(list_filter(string_split(text, ' '), x -> x != ''))
-          AS word FROM documents)
-),
-walk(word, pos, idx, piece) AS (
-  SELECT word, 1, 0, CAST(NULL AS VARCHAR) FROM dw
-  UNION ALL
-  SELECT w.word, w.pos + length(m.core), w.idx + 1, m.tok
-  FROM walk w,
-  LATERAL (
-    SELECT v.tok, v.core FROM vocab v
-    WHERE v.is_cont = (w.pos > 1)
-      AND substr(w.word, w.pos, length(v.core)) = v.core
-    ORDER BY length(v.core) DESC, v.tok
-    LIMIT 1
-  ) m
-  WHERE w.pos <= length(w.word)
-),
-perword AS (
-  SELECT word, string_agg(piece, ' ' ORDER BY idx) AS ps,
-         max(pos) AS maxpos, count(*)::BIGINT AS np
-  FROM walk WHERE idx > 0 GROUP BY word
-),
-seg AS (
-  -- the length-cap rule mirrors the engine's MAX_CHARS_PER_TOKEN=100:
-  -- over-long words are [UNK] regardless of whether the walk completes
-  SELECT d.word,
-         CASE WHEN length(d.word) <= 100 AND p.maxpos = length(d.word) + 1
-              THEN p.ps ELSE '[UNK]' END AS word_pieces,
-         CASE WHEN length(d.word) <= 100 AND p.maxpos = length(d.word) + 1
-              THEN p.np ELSE 1::BIGINT END AS word_n_pieces,
-         CASE WHEN length(d.word) <= 100 AND p.maxpos = length(d.word) + 1
-              THEN 0 ELSE 1 END AS word_is_unk
-  FROM dw d LEFT JOIN perword p USING (word)
-),
-docwords AS (
-  SELECT doc_id, i - 1 AS pos, ws[i] AS word
-  FROM (SELECT doc_id, list_filter(string_split(text, ' '), x -> x != '')
-          AS ws FROM documents) t,
-  unnest(range(1, len(ws) + 1)) AS r(i)
-)
-SELECT dwx.doc_id::BIGINT AS doc_id,
-       count(*)::BIGINT AS n_words,
-       sum(s.word_n_pieces)::BIGINT AS n_pieces,
-       sum(s.word_is_unk)::BIGINT AS n_unk_words,
-       string_agg(s.word_pieces, ' ' ORDER BY dwx.pos) AS pieces_str
-FROM docwords dwx JOIN seg s USING (word)
-GROUP BY dwx.doc_id
-"""
-
-
-TEXTSTATS["ts_wordpiece_segments"] = _wordpiece_oracle()
-
-# two-level packing (VERDICT r3): bucket = md5_int(doc_id) % 8, local
-# exclusive running sum within (source, bucket), plus a per-bucket
-# token-total prefix offset in bucket order within the source
-TEXTSTATS["ts_shard_packing"] = f"""
-    WITH t AS (SELECT doc_id, source,
-                      len(list_filter(string_split(text, ' '), x -> x != ''))
-                        AS n_tokens,
-                      {duckdb_md5_int_sql("doc_id::VARCHAR")} % 8 AS bucket
-               FROM documents),
-    loc AS (
-      SELECT *, coalesce(sum(n_tokens) OVER (
-                   PARTITION BY source, bucket ORDER BY doc_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS local_before
-      FROM t
-    ),
-    tot AS (SELECT source, bucket, sum(n_tokens) AS bucket_total
-            FROM t GROUP BY source, bucket),
-    offs AS (
-      SELECT source, bucket, coalesce(sum(bucket_total) OVER (
-                 PARTITION BY source ORDER BY bucket
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS bucket_offset
-      FROM tot
-    )
-    SELECT l.doc_id::BIGINT AS doc_id, l.source,
-           l.n_tokens::BIGINT AS n_tokens,
-           floor((o.bucket_offset + l.local_before) / 256)::BIGINT AS shard_idx
-    FROM loc l JOIN offs o ON o.source = l.source AND o.bucket = l.bucket
-"""
-
-# quality gate AND language gate AND near-dup-survivor gate (full verified
-# cluster chain reused; losers excluded with an anti-join)
-# temperature-weighted source mixing (alpha = 0.5): integer-quantized
-# sqrt weights, integer thresholds, md5 membership — mirrors
-# textstats.source_mixture arithmetic step for step
-TEXTSTATS["ts_source_mixture"] = f"""
-    WITH d AS (
-      SELECT doc_id::BIGINT AS doc_id, source,
-             len(list_filter(string_split(text, ' '), x -> x != ''))::BIGINT
-               AS n_tokens
-      FROM documents
-    ),
-    per_source AS (
-      SELECT source, count(*)::BIGINT AS n_docs,
-             sum(n_tokens)::BIGINT AS total_tokens,
-             floor(sqrt(sum(n_tokens)::DOUBLE) * 1000)::BIGINT AS q
-      FROM d GROUP BY source
-    ),
-    dn AS (SELECT sum(q)::BIGINT AS denom FROM per_source),
-    th AS (
-      SELECT p.*, least(1000000, 4000 * p.q * 1000000 // (dn.denom * p.total_tokens))::BIGINT AS keep_ppm,
-             (p.q * 1000000 // dn.denom)::BIGINT AS weight_ppm
-      FROM per_source p CROSS JOIN dn
-    ),
-    sampled AS (
-      SELECT d.source, count(*)::BIGINT AS sampled_docs,
-             sum(d.n_tokens)::BIGINT AS sampled_tokens
-      FROM d JOIN th ON th.source = d.source
-      WHERE {duckdb_md5_int_sql("d.doc_id::VARCHAR")} % 1000000 < th.keep_ppm
-      GROUP BY d.source
-    )
-    SELECT t.source, t.n_docs, t.total_tokens, t.weight_ppm, t.keep_ppm,
-           coalesce(s.sampled_docs, 0)::BIGINT AS sampled_docs,
-           coalesce(s.sampled_tokens, 0)::BIGINT AS sampled_tokens
-    FROM th t LEFT JOIN sampled s ON s.source = t.source
-"""
-
-# exact nearest-rank quantiles over the aggregated value domain —
-# mirrors textstats.token_quantiles (cum * 1e6 >= n * ppm pick rule)
-TEXTSTATS["ts_token_quantiles"] = """
-    WITH d AS (
-      SELECT source,
-             len(list_filter(string_split(text, ' '), x -> x != ''))::BIGINT
-               AS n_tokens
-      FROM documents
-    ),
-    dom AS (SELECT source, n_tokens, count(*)::BIGINT AS c
-            FROM d GROUP BY source, n_tokens),
-    ranked AS (
-      SELECT source, n_tokens, c,
-             sum(c) OVER (PARTITION BY source ORDER BY n_tokens)::BIGINT AS cum,
-             sum(c) OVER (PARTITION BY source)::BIGINT AS n
-      FROM dom
-    )
-    SELECT source, max(n)::BIGINT AS n_docs_total,
-           min(CASE WHEN cum * 1000000 >= n * 250000 THEN n_tokens END)::BIGINT AS p25,
-           min(CASE WHEN cum * 1000000 >= n * 500000 THEN n_tokens END)::BIGINT AS p50,
-           min(CASE WHEN cum * 1000000 >= n * 750000 THEN n_tokens END)::BIGINT AS p75,
-           min(CASE WHEN cum * 1000000 >= n * 900000 THEN n_tokens END)::BIGINT AS p90,
-           min(CASE WHEN cum * 1000000 >= n * 990000 THEN n_tokens END)::BIGINT AS p99
-    FROM ranked GROUP BY source
-"""
-
-TEXTSTATS["ts_corpus_selection"] = f"""
-    WITH RECURSIVE {_SHINGLES_CTE},
-    {_MINHASH_BAND_CTES},
-    cands AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM banded a JOIN banded b
-        ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-    ),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    common AS (
-      SELECT c.doc_a, c.doc_b, count(*) AS cmn
-      FROM cands c
-      JOIN sh sa ON sa.doc_id = c.doc_a
-      JOIN sh sb ON sb.doc_id = c.doc_b AND sb.shingle = sa.shingle
-      GROUP BY c.doc_a, c.doc_b
-    ),
-    verified AS (
-      SELECT co.doc_a, co.doc_b
-      FROM common co
-      JOIN sizes za ON za.doc_id = co.doc_a
-      JOIN sizes zb ON zb.doc_id = co.doc_b
-      WHERE co.cmn * 1.0 / (za.n + zb.n - co.cmn) >= 0.9
-    ),
-    vedges AS (SELECT doc_a AS src, doc_b AS dst FROM verified
-               UNION SELECT doc_b, doc_a FROM verified),
-    reach AS (
-      SELECT src AS node, dst AS r FROM vedges
-      UNION
-      SELECT e2.src, r.r FROM vedges e2 JOIN reach r ON r.node = e2.dst
-    ),
-    canon AS (SELECT node, least(min(r), node) AS cluster_id
-              FROM reach GROUP BY node),
-    losers AS (SELECT node AS doc_id FROM canon WHERE node != cluster_id),
-    qt AS (SELECT doc_id,
-                  list_filter(string_split(text, ' '), x -> x != '') AS toks
-           FROM documents),
-    qg AS (SELECT doc_id, toks,
-                  list_transform(range(1, len(toks)),
-                                 i -> toks[i] || ' ' || toks[i + 1]) AS g2,
-                  list_transform(range(1, len(toks) - 1),
-                                 i -> toks[i] || ' ' || toks[i + 1]
-                                         || ' ' || toks[i + 2]) AS g3
-           FROM qt),
-    qs AS (SELECT doc_id, len(toks) AS n_toks,
-                  len(list_distinct(toks)) AS n_distinct,
-                  len(list_filter(toks, x -> x IN ('the', 'a'))) AS n_stop,
-                  len(g2) AS n_bigrams,
-                  coalesce(list_max(list_transform(list_distinct(g2),
-                      x -> len(list_filter(g2, y -> y = x)))), 0) AS top_bigram_n,
-                  len(g3) - len(list_distinct(g3)) AS dup_trigram_n,
-                  len(g3) AS n_trigrams
-           FROM qg),
-    scored AS (
-      SELECT doc_id,
-             round(0.4 * least(1.0, n_toks / 100.0)
-                   + 0.3 * (n_distinct / greatest(n_toks, 1))
-                   + 0.3 * (1 - n_stop / greatest(n_toks, 1)), 6)::DOUBLE
-               AS quality,
-             (CASE WHEN n_bigrams > 0
-                   THEN round(top_bigram_n / n_bigrams, 6)
-                   ELSE 0.0 END)::DOUBLE AS top_bigram_frac,
-             (CASE WHEN n_trigrams > 0
-                   THEN round(dup_trigram_n / n_trigrams, 6)
-                   ELSE 0.0 END)::DOUBLE AS dup_trigram_frac,
-             CASE WHEN n_toks > 0 AND
-                       n_stop * 1.0 / n_toks >= 0.05
-                  THEN 'en' ELSE 'und' END AS pred_lang
-      FROM qs
-    )
-    SELECT s.doc_id::BIGINT AS doc_id, s.quality
-    FROM scored s
-    WHERE s.pred_lang = 'en' AND s.quality >= 0.62
-      AND s.top_bigram_frac <= 0.20 AND s.dup_trigram_frac <= 0.18
-      AND s.doc_id NOT IN (SELECT doc_id FROM losers)
-"""
-
-# ---------------------------------------------------------------------------
 # KG pipeline oracles (independent SQL formulation of stages 1, 3/4, 2/5)
+#
+# DuckDB (1.0) inlines a CTE at every reference, so a chain referenced from
+# several places (mentions, canon, entities, and the graph oracles' turn_ents,
+# co and nbrs) is recomputed per reference: on sf0.01 the two-hop and
+# PageRank oracles then take minutes and the triangle oracle exhausts memory.
+# Those CTEs are declared AS MATERIALIZED; the results do not change.
 # ---------------------------------------------------------------------------
 
 
@@ -986,7 +138,7 @@ islands AS (
                                   ORDER BY m_start) AS island
   FROM flagged
 ),
-mentions AS (
+mentions AS MATERIALIZED (
   SELECT conv_id, turn_idx, type,
          min(m_start)::INTEGER AS start, max(m_end)::INTEGER AS "end",
          substr(any_value(text), min(m_start) + 1, max(m_end) - min(m_start)) AS surface,
@@ -1014,51 +166,15 @@ reach AS (
   UNION
   SELECT e.src, r.r FROM edges e JOIN reach r ON r.node = e.dst
 ),
-canon AS (
+canon AS MATERIALIZED (
   SELECT node, least(min(r), node) AS canonical FROM reach GROUP BY node
 ),
-entities AS (
+entities AS MATERIALIZED (
   SELECT s.surface_norm, coalesce(c.canonical, s.surface_norm) AS canonical_id
   FROM surfaces s LEFT JOIN canon c ON c.node = s.surface_norm
 )
 """.strip()
 
-
-MULTIMODAL: dict[str, str] = {
-    # media payloads are utf-8 bytes of documents.text; the stub decoder's
-    # features are the first 8 bytes / 255 — re-derivable from text in SQL
-    "mm_media_features": """
-        SELECT doc_id::BIGINT AS doc_id,
-               CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
-                    ELSE 'video' END AS kind,
-               strlen(text)::BIGINT AS n_bytes,
-    """
-    + ",\n               ".join(
-        f"round(CASE WHEN {i + 1} <= length(text)"
-        f" THEN ascii(substr(text, {i + 1}, 1)) / 255.0 ELSE 0.0 END, 6)::DOUBLE"
-        f" AS f{i}"
-        for i in range(8)
-    )
-    + """
-        FROM documents
-    """,
-    "mm_frame_sample": """
-        WITH video AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 = 2),
-        frames AS (
-          SELECT doc_id, f.i AS frame_idx,
-                 least(16, strlen(text) - f.i * 16) AS frame_bytes,
-                 substr(text, f.i * 16 + 1, 16) AS chunk
-          FROM video,
-          UNNEST(range(0, least(4, greatest(1, strlen(text) // 16)))) AS f(i)
-        )
-        SELECT doc_id::BIGINT AS doc_id, frame_idx::INTEGER AS frame_idx,
-               frame_bytes::INTEGER AS frame_bytes,
-               (list_sum(list_prepend(0,
-                  [ascii(substr(chunk, i, 1)) FOR i IN range(1, length(chunk) + 1)]))
-                % 256)::INTEGER AS checksum
-        FROM frames
-    """,
-}
 
 TRAINSET: dict[str, str] = {}  # filled below (needs the KG mention CTE)
 
@@ -1091,7 +207,7 @@ JOIN surfaces s2 ON s2.surface_norm = p.b
     "kg_triples": f"""
 WITH RECURSIVE placeholder AS (SELECT 1),
 {kg_common_ctes()[5:]},
-turn_ents AS (
+turn_ents AS MATERIALIZED (
   SELECT DISTINCT m.conv_id, m.turn_idx, e.canonical_id
   FROM mentions m JOIN entities e ON e.surface_norm = m.surface_norm
 ),
@@ -1220,11 +336,11 @@ GROUP BY l.conv_id
     "kg_entity_degrees": f"""
 WITH RECURSIVE placeholder AS (SELECT 1),
 {kg_common_ctes()[5:]},
-turn_ents AS (
+turn_ents AS MATERIALIZED (
   SELECT DISTINCT m.conv_id, m.turn_idx, e.canonical_id
   FROM mentions m JOIN entities e ON e.surface_norm = m.surface_norm
 ),
-co AS (
+co AS MATERIALIZED (
   SELECT a.canonical_id AS subj, b.canonical_id AS obj
   FROM turn_ents a JOIN turn_ents b
     ON a.conv_id = b.conv_id AND a.turn_idx = b.turn_idx
@@ -1320,17 +436,17 @@ WHERE u.role = 'user' AND a.role = 'assistant'
     "kg_two_hop": f"""
 WITH RECURSIVE placeholder AS (SELECT 1),
 {kg_common_ctes()[5:]},
-turn_ents AS (
+turn_ents AS MATERIALIZED (
   SELECT DISTINCT m.conv_id, m.turn_idx, e.canonical_id
   FROM mentions m JOIN entities e ON e.surface_norm = m.surface_norm
 ),
-co AS (
+co AS MATERIALIZED (
   SELECT DISTINCT a.canonical_id AS subj, b.canonical_id AS obj
   FROM turn_ents a JOIN turn_ents b
     ON a.conv_id = b.conv_id AND a.turn_idx = b.turn_idx
    AND a.canonical_id < b.canonical_id
 ),
-nbrs AS (SELECT subj, obj FROM co UNION SELECT obj, subj FROM co),
+nbrs AS MATERIALIZED (SELECT subj, obj FROM co UNION SELECT obj, subj FROM co),
 one_hop AS (SELECT subj, count(DISTINCT obj)::BIGINT AS n_one_hop FROM nbrs GROUP BY subj),
 expandable AS (SELECT subj FROM one_hop WHERE n_one_hop <= 10000),
 two AS (
@@ -1363,17 +479,17 @@ FROM mentions GROUP BY type ORDER BY freq DESC, type
     "kg_pagerank": f"""
 WITH RECURSIVE placeholder AS (SELECT 1),
 {kg_common_ctes()[5:]},
-turn_ents AS (
+turn_ents AS MATERIALIZED (
   SELECT DISTINCT m.conv_id, m.turn_idx, e.canonical_id
   FROM mentions m JOIN entities e ON e.surface_norm = m.surface_norm
 ),
-co AS (
+co AS MATERIALIZED (
   SELECT DISTINCT a.canonical_id AS src, b.canonical_id AS dst
   FROM turn_ents a JOIN turn_ents b
     ON a.conv_id = b.conv_id AND a.turn_idx = b.turn_idx
    AND a.canonical_id < b.canonical_id
 ),
-nbrs AS (SELECT src, dst FROM co UNION SELECT dst, src FROM co),
+nbrs AS MATERIALIZED (SELECT src, dst FROM co UNION SELECT dst, src FROM co),
 deg AS (SELECT src, count(*)::BIGINT AS deg FROM nbrs GROUP BY src),
 nn AS (SELECT count(*)::BIGINT AS n FROM deg),
 pr0 AS (SELECT d.src, (1000000000000 // n)::BIGINT AS pr_q, d.deg
@@ -1405,17 +521,17 @@ SELECT src AS canonical_id, pr_q FROM pr3 ORDER BY pr_q DESC, canonical_id
     "kg_triangles": f"""
 WITH RECURSIVE placeholder AS (SELECT 1),
 {kg_common_ctes()[5:]},
-turn_ents AS (
+turn_ents AS MATERIALIZED (
   SELECT DISTINCT m.conv_id, m.turn_idx, e.canonical_id
   FROM mentions m JOIN entities e ON e.surface_norm = m.surface_norm
 ),
-co AS (
+co AS MATERIALIZED (
   SELECT DISTINCT a.canonical_id AS src, b.canonical_id AS dst
   FROM turn_ents a JOIN turn_ents b
     ON a.conv_id = b.conv_id AND a.turn_idx = b.turn_idx
    AND a.canonical_id < b.canonical_id
 ),
-nbrs AS (SELECT src, dst FROM co UNION SELECT dst, src FROM co),
+nbrs AS MATERIALIZED (SELECT src, dst FROM co UNION SELECT dst, src FROM co),
 degx AS (SELECT src, count(*)::BIGINT AS deg FROM nbrs GROUP BY src),
 ori AS (
   SELECT CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND u.src < u.dst)
@@ -1447,17 +563,17 @@ ORDER BY n_triangles DESC, canonical_id
     "kg_communities": f"""
 WITH RECURSIVE placeholder AS (SELECT 1),
 {kg_common_ctes()[5:]},
-turn_ents AS (
+turn_ents AS MATERIALIZED (
   SELECT DISTINCT m.conv_id, m.turn_idx, e.canonical_id
   FROM mentions m JOIN entities e ON e.surface_norm = m.surface_norm
 ),
-co AS (
+co AS MATERIALIZED (
   SELECT DISTINCT a.canonical_id AS src, b.canonical_id AS dst
   FROM turn_ents a JOIN turn_ents b
     ON a.conv_id = b.conv_id AND a.turn_idx = b.turn_idx
    AND a.canonical_id < b.canonical_id
 ),
-nbrs AS (SELECT src, dst FROM co UNION SELECT dst, src FROM co),
+nbrs AS MATERIALIZED (SELECT src, dst FROM co UNION SELECT dst, src FROM co),
 l0 AS (SELECT DISTINCT src AS node, src AS lab FROM nbrs),
 c1 AS (SELECT e.dst AS node, l.lab, count(*) AS c
        FROM nbrs e JOIN l0 l ON l.node = e.src GROUP BY 1, 2),
@@ -1512,17 +628,17 @@ ORDER BY conv_id, src_turn_idx, subj, pred, obj
     "kg_degree_histogram": f"""
 WITH RECURSIVE placeholder AS (SELECT 1),
 {kg_common_ctes()[5:]},
-turn_ents AS (
+turn_ents AS MATERIALIZED (
   SELECT DISTINCT m.conv_id, m.turn_idx, e.canonical_id
   FROM mentions m JOIN entities e ON e.surface_norm = m.surface_norm
 ),
-co AS (
+co AS MATERIALIZED (
   SELECT DISTINCT a.canonical_id AS src, b.canonical_id AS dst
   FROM turn_ents a JOIN turn_ents b
     ON a.conv_id = b.conv_id AND a.turn_idx = b.turn_idx
    AND a.canonical_id < b.canonical_id
 ),
-nbrs AS (SELECT src, dst FROM co UNION SELECT dst, src FROM co),
+nbrs AS MATERIALIZED (SELECT src, dst FROM co UNION SELECT dst, src FROM co),
 deg AS (SELECT src, count(*)::BIGINT AS degree FROM nbrs GROUP BY src)
 SELECT (length(bin(degree)) - 1)::BIGINT AS bucket,
        count(*)::BIGINT AS n_entities,
@@ -1532,61 +648,6 @@ FROM deg GROUP BY bucket ORDER BY bucket
     """,
     # corrupt-tail negative sampling replay: portable md5 index mod n with
     # step-on-collision — mirrored hash contract (hashing.py)
-    "tr_kg_negatives": f"""
-WITH RECURSIVE placeholder AS (SELECT 1),
-{kg_common_ctes()[5:]},
-turn_ents AS (
-  SELECT DISTINCT m.conv_id, m.turn_idx, e.canonical_id
-  FROM mentions m JOIN entities e ON e.surface_norm = m.surface_norm
-),
-same_turn AS (
-  SELECT a.conv_id, a.canonical_id AS subj, 'co_occurs_with' AS pred,
-         b.canonical_id AS obj, a.turn_idx AS src_turn_idx
-  FROM turn_ents a JOIN turn_ents b
-    ON a.conv_id = b.conv_id AND a.turn_idx = b.turn_idx
-   AND a.canonical_id < b.canonical_id
-),
-follows AS (
-  SELECT DISTINCT a.conv_id, a.canonical_id AS subj, 'follows' AS pred,
-         b.canonical_id AS obj, a.turn_idx AS src_turn_idx
-  FROM turn_ents a JOIN turn_ents b
-    ON a.conv_id = b.conv_id
-   AND b.turn_idx BETWEEN a.turn_idx - 2 AND a.turn_idx - 1
-),
-trip AS (
-  SELECT DISTINCT subj, pred, obj FROM (
-    SELECT subj, pred, obj FROM same_turn
-    UNION ALL SELECT subj, pred, obj FROM follows
-  )
-),
-ent_set AS (SELECT DISTINCT canonical_id FROM turn_ents),
-nn AS (SELECT count(*)::BIGINT AS n FROM ent_set),
--- the engine's two-level dense_index (operators/indexing.py) orders by
--- (md5-bucket % 32, key); the flat ORDER BY here is value-identical
-ents_idx AS (
-  SELECT canonical_id,
-         row_number() OVER (
-           ORDER BY {duckdb_md5_int_sql("canonical_id")} % 32, canonical_id
-         ) - 1 AS idx
-  FROM ent_set
-),
-cand AS (
-  SELECT t.subj, t.pred, t.obj,
-         {duckdb_md5_int_sql("t.subj || '|' || t.pred || '|' || t.obj")}
-           % nn.n AS cand_idx, nn.n
-  FROM trip t CROSS JOIN nn
-),
-neg AS (
-  SELECT c.subj, c.pred, c.obj,
-         CASE WHEN c.cand_idx = oi.idx THEN (c.cand_idx + 1) % c.n
-              ELSE c.cand_idx END AS neg_idx
-  FROM cand c JOIN ents_idx oi ON oi.canonical_id = c.obj
-)
-SELECT g.subj, g.pred, g.obj, e.canonical_id AS neg_obj
-FROM neg g JOIN ents_idx e ON e.idx = g.neg_idx
-WHERE e.canonical_id <> g.obj  -- n=1 degenerate case: no valid negative
-ORDER BY subj, pred, obj
-    """,
     # staged integer division mirrored from the engine: ((c_ab*1e6) DIV
     # c_a) * n DIV c_b — exact-match contract, bounded magnitude
     "kg_edge_lift": f"""

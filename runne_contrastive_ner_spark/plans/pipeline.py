@@ -73,8 +73,7 @@ def fold_analytics(
     tables on the entity id. In the staged pipeline the four inputs are
     TableIO snapshots BUCKETED on ``src`` (VERDICT r6 item 5), so this
     join chain runs with ZERO Exchange — the shuffle was paid once at the
-    component writes; tools/explain_audit.py asserts the exchange-free
-    shape as ``analytics_stage_fold``."""
+    component writes."""
     return (
         pr.join(tri, "src", "left")
         .join(comm, "src", "left")

@@ -11,6 +11,11 @@ reading ~100 TB; on ``local[N]`` they are harmless and keep plans identical:
 * Shuffle partitions sized for the local harness; a cluster deployment would
   set this (or rely on AQE coalescing) per data volume.
 * UTC session timezone so timestamp semantics line up with the DuckDB oracle.
+* Sized to the host: ``local[N]`` over the cores this process may run on, and
+  a driver heap of a quarter of physical RAM clamped to 1..8 GiB (local mode
+  runs every task inside that one JVM, so a fixed large heap gets the JVM
+  OOM-killed on a small host). ``SPARK_GRAFT_CPUS`` and
+  ``SPARK_DRIVER_MEMORY`` override the two defaults.
 """
 
 from __future__ import annotations
@@ -20,13 +25,25 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cpus() -> int:
+    """Cores this process may run on (its CPU affinity, not the machine's)."""
+    return len(os.sched_getaffinity(0))
+
+
+def default_driver_memory_gb(total_bytes: int | None = None) -> int:
+    """A quarter of physical RAM in whole GiB, clamped to 1..8."""
+    if total_bytes is None:
+        total_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return max(1, min(8, total_bytes // (4 << 30)))
+
+
 def build_session(
     app_name: str = "runne-kg-engine",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(default_cpus())
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(cpus)
 
@@ -40,11 +57,12 @@ def build_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
         .config("spark.sql.session.timeZone", "UTC")
-        # local mode: the driver JVM hosts every task; with 32 concurrent
-        # hash-aggregate tasks an 8g heap GC-thrashes (measured: the triple
-        # distinct stage anti-scaled 11.5s@8c -> 27.3s@32c) — size the heap
-        # for the thread count
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        # local mode: the driver JVM hosts every task, so this heap is the
+        # whole engine's memory; it must fit the host (see the module doc)
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or f"{default_driver_memory_gb()}g",
+        )
         # throughput GC for batch workloads: measured 2.5x on the
         # allocation-heavy triple stage vs default G1 (33.4s -> 13.4s at 32
         # threads); latency is irrelevant for this engine

@@ -26,7 +26,7 @@ CONV_BUCKETS = 40
 EPOCH = "2025-01-01 00:00:00"
 
 # the SAME derivation, in DuckDB SQL, parameterized by nothing; used by
-# __spark_entry__.oracle_sql so both systems read one source of truth
+# the DuckDB oracles (oracle_sql.py) so both systems read one source of truth
 DUCKDB_TRANSCRIPTS_SQL = f"""
 SELECT
   'conv-' || lpad(CAST(doc_id % {CONV_BUCKETS} AS VARCHAR), 4, '0') AS conv_id,

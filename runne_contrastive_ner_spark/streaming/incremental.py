@@ -9,10 +9,12 @@ shapes a production deployment layers on top:
   per-bucket ledger, so a killed job resumes at bucket granularity and
   re-running is idempotent. This is the pattern for backfilling 10^12 turns:
   bounded units of work, each with its own lineage row.
-* ``streaming_event_counts`` — Structured Streaming ingest of an events
-  directory: file source → event-time window + watermark → append sink.
-  Demonstrates the engine's operators compose with readStream (the mention
-  UDFs are stateless per-row, so `extract_mentions` works unchanged on a
+* ``incremental_kg_fold`` / ``refresh_analytics`` — fold newly ingested
+  conversations into the stored KG tables (and refresh the analytics
+  tables) without rebuilding from scratch.
+* ``streaming_mentions`` — Structured Streaming ingest of a transcripts
+  directory: file source → ``extract_mentions`` per micro-batch (the
+  mention UDFs are stateless per row, so the operator works unchanged on a
   streaming DataFrame).
 """
 
@@ -777,105 +779,5 @@ def streaming_mentions(
         .writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
-        .start()
-    )
-
-
-def streaming_sessionization(
-    spark: SparkSession,
-    events_dir: str,
-    checkpoint_dir: str,
-    gap_sec: int = 1800,
-    max_files_per_trigger: int | None = None,
-):
-    """Custom STATEFUL streaming operator via ``applyInPandasWithState``:
-    per-user sessionization with a ``gap_sec`` inactivity gap, state carried
-    across micro-batches. State per user = (last event epoch, sessions so
-    far, events in current session); each batch's rows are sorted by event
-    time inside the function, so the operator is deterministic as long as
-    file order respects event time (the test stages files that way —
-    at-scale deployments pair this with a watermark-bounded source).
-
-    Returns the StreamingQuery writing `(user_id, n_sessions, n_events)` in
-    update mode to a memory sink named 'user_sessions'; caller stops it.
-    """
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    schema = spark.read.parquet(events_dir).schema
-
-    output_schema = "user_id long, n_sessions long, n_events long"
-    state_schema = "last_epoch long, n_sessions long, n_events long"
-
-    def sessionize(key, pdfs, state: GroupState):
-        user_id = int(key[0])
-        if state.exists:
-            last_epoch, n_sessions, n_events = state.get
-        else:
-            last_epoch, n_sessions, n_events = -1, 0, 0
-        for pdf in pdfs:
-            for epoch in sorted(int(v) for v in pdf["epoch"]):
-                if last_epoch < 0 or epoch - last_epoch > gap_sec:
-                    n_sessions += 1
-                last_epoch = epoch
-                n_events += 1
-        state.update((last_epoch, n_sessions, n_events))
-        yield pd.DataFrame(
-            {"user_id": [user_id], "n_sessions": [n_sessions], "n_events": [n_events]}
-        )
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = (
-        reader.parquet(events_dir)
-        .withColumn("epoch", F.floor(F.unix_timestamp(F.col("ts").cast("timestamp"))))
-        .select("user_id", "epoch")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            sessionize,
-            outputStructType=output_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-    return (
-        stream.writeStream.format("memory")
-        .queryName("user_sessions")
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def streaming_event_counts(
-    spark: SparkSession,
-    events_dir: str,
-    checkpoint_dir: str,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-):
-    """readStream over an events parquet directory → watermarked event-time
-    windowed counts. Returns the StreamingQuery (memory sink named
-    'event_counts'); caller stops it."""
-    schema = spark.read.parquet(events_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(events_dir)
-        # watermarks require zoned TIMESTAMP; parquet stores NTZ (session tz
-        # is pinned to UTC, so the cast is value-preserving)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window), F.col("event_type"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    return (
-        stream.writeStream.format("memory")
-        .queryName("event_counts")
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
         .start()
     )

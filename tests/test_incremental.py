@@ -1,8 +1,6 @@
 """Tests for incremental bucket ingest (resume-after-crash) and the
 Structured Streaming ingest path."""
 
-import time
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -11,7 +9,6 @@ from runne_contrastive_ner_spark.sources.transcripts import synthesize
 from runne_contrastive_ner_spark.streaming.incremental import (
     _load_ledger,
     incremental_mentions,
-    streaming_event_counts,
     streaming_mentions,
 )
 
@@ -71,20 +68,6 @@ class TestIncremental:
 
 
 class TestStreaming:
-    def test_windowed_counts_match_batch(self, spark, tmp_path):
-        sf_dir = "/root/testdata/sf0.001"
-        # file-stream sources require a directory; stage the table into one
-        events_dir = str(tmp_path / "events")
-        spark.read.parquet(f"{sf_dir}/events.parquet").write.parquet(events_dir)
-        q = streaming_event_counts(spark, events_dir, str(tmp_path / "ckpt"))
-        try:
-            q.processAllAvailable()
-            streamed = spark.sql("SELECT sum(n) AS total FROM event_counts").collect()[0][0]
-        finally:
-            q.stop()
-        batch = spark.read.parquet(f"{sf_dir}/events.parquet").count()
-        assert streamed == batch
-
     def test_streaming_mentions_match_batch(self, spark, tmp_path):
         t = synthesize(spark, n_convs=4, turns_per_conv=6, long_conv_turns=0)
         tdir = str(tmp_path / "transcripts")
@@ -101,71 +84,6 @@ class TestStreaming:
 
 
 class TestSkewBalance:
-    def test_stateful_sessionization_matches_batch(self, spark, tmp_path):
-        """applyInPandasWithState carries per-user session state across
-        micro-batches: 2 time-ordered files × maxFilesPerTrigger=1 forces 2
-        batches; final counters must equal the batch gaps-and-islands
-        computation."""
-        from pyspark.sql import Window
-
-        from runne_contrastive_ner_spark.streaming.incremental import (
-            streaming_sessionization,
-        )
-
-        sf_dir = "/root/testdata/sf0.001"
-        events = spark.read.parquet(f"{sf_dir}/events.parquet")
-        # stage into two files split at the median epoch so state must carry over
-        with_epoch = events.withColumn(
-            "ep", F.floor(F.unix_timestamp(F.col("ts").cast("timestamp")))
-        )
-        median = with_epoch.approxQuantile("ep", [0.5], 0.0)[0]
-        events_dir = str(tmp_path / "events_staged")
-        early = with_epoch.filter(F.col("ep") <= median).drop("ep")
-        late = with_epoch.filter(F.col("ep") > median).drop("ep")
-        early.coalesce(1).write.parquet(events_dir)
-        time.sleep(1.1)  # distinct mtimes: FileStreamSource reads early first
-        late.coalesce(1).write.mode("append").parquet(events_dir)
-
-        q = streaming_sessionization(
-            spark,
-            events_dir,
-            str(tmp_path / "ckpt_sess"),
-            max_files_per_trigger=1,
-        )
-        q.awaitTermination(120)
-        got = (
-            spark.table("user_sessions")
-            .groupBy("user_id")
-            .agg(
-                F.max("n_sessions").alias("n_sessions"),
-                F.max("n_events").alias("n_events"),
-            )
-        )
-        # batch reference: gaps-and-islands over event epochs per user
-        w = Window.partitionBy("user_id").orderBy("epoch", "event_id")
-        batch = (
-            events.withColumn(
-                "epoch", F.floor(F.unix_timestamp(F.col("ts").cast("timestamp")))
-            )
-            .withColumn("prev", F.lag("epoch").over(w))
-            .withColumn(
-                "new_session",
-                F.when(
-                    F.col("prev").isNull() | (F.col("epoch") - F.col("prev") > 1800), 1
-                ).otherwise(0),
-            )
-            .groupBy("user_id")
-            .agg(
-                F.sum("new_session").alias("n_sessions"),
-                F.count(F.lit(1)).alias("n_events"),
-            )
-        )
-        got_rows = {r["user_id"]: (r["n_sessions"], r["n_events"]) for r in got.collect()}
-        batch_rows = {
-            r["user_id"]: (r["n_sessions"], r["n_events"]) for r in batch.collect()
-        }
-        assert got_rows == batch_rows
-
     def test_salted_repartition_spreads_long_conversation(self, spark):
         """One conversation 10x longer than the rest must not pin a single
         task: with salting on (conv_id, turn_idx) the max partition holds a

@@ -28,6 +28,7 @@ from runne_contrastive_ner_spark.operators.linking import (
     BIGRAM_THRESHOLD,
     bigram_embedding_edges,
     canonicalize,
+    embedding_edges,
     entity_nodes,
 )
 
@@ -150,18 +151,18 @@ def test_bigram_default_threshold_is_072(spark, nodes):
 
 
 def test_driver_corpus_has_an_embedding_only_merge(spark):
-    """On the driver corpus itself (sf0.001), kg_entities vs
-    kg_entities_embedding differ by at least one real merge."""
-    import __spark_entry__ as E
+    """On the driver corpus itself (sf0.001), alias-only and embedding-edge
+    canonicalization differ by at least one real merge."""
+    from runne_contrastive_ner_spark.operators.mentions import extract_mentions
+    from runne_contrastive_ner_spark.sources.transcripts import from_documents
 
-    sf = "/root/testdata/sf0.001"
-    plain = _canonical_map(E.kg_entities(spark, sf))
-    emb = {
-        r["surface_norm"]: r["canonical_id"]
-        for r in E.kg_entities_embedding(spark, sf)
-        .select("surface_norm", "canonical_id")
-        .collect()
-    }
+    mentions = extract_mentions(from_documents(spark, "/root/testdata/sf0.001"))
+    plain = _canonical_map(canonicalize(spark, mentions)[0])
+    emb = _canonical_map(
+        canonicalize(
+            spark, mentions, use_embedding_edges=True, embedding_method="bigram"
+        )[0]
+    )
     assert set(plain) == set(emb)
     extra = {s for s in plain if emb[s] != plain[s]}
     assert extra, "embedding edges produced no merge beyond the alias list"
@@ -231,3 +232,19 @@ def test_lsh_candidates_recall_at_dictionary_scale(spark):
     assert got <= truth
     recall = len(got) / len(truth)
     assert recall >= 0.95, f"LSH recall {recall:.4f} < 0.95 ({len(got)}/{len(truth)})"
+
+
+def test_embedding_edges_lsh_matches_allpairs(spark):
+    """VERDICT r1 item 10: the optional contrastive-linking edge source is
+    LSH-bucketed; property-test edge recall vs the all-pairs form. Surfaces
+    and hash embeddings are fully deterministic (md5), so exact set equality
+    is a stable assertion."""
+    surfaces = [(f"surface {i:03d}",) for i in range(240)]
+    nodes = spark.createDataFrame(surfaces, "surface_norm string")
+    kw = dict(threshold=0.6, dim=16, n_tables=16, n_planes=2)
+    lsh = sorted(tuple(r) for r in embedding_edges(nodes, method="lsh", **kw).collect())
+    exact = sorted(
+        tuple(r) for r in embedding_edges(nodes, method="exact", **kw).collect()
+    )
+    assert len(exact) > 0  # the threshold actually selects pairs
+    assert lsh == exact

@@ -14,16 +14,17 @@ sentenize→tokenize→score→decode pipeline on a DOCUMENTED input domain:
   - non-ASCII word boundaries (oracle guards with [a-z0-9]; the engine
     tokenizer is Unicode-aware), and zero-width spaces inside a match gap
     (engine treats ZWSP as a space; DuckDB trim() does not).
-  The driver corpus (single-line lowercase-ASCII, verified in
-  test_trainset_multimodal) contains none of these.
+  The sf test corpora (single-line lowercase ASCII) contain none of these;
+  tests/test_kg_oracles.py checks the full oracle set on sf0.01.
 """
 
 import duckdb
 import pandas as pd
 import pytest
 
-import __spark_entry__ as entry_mod
 from runne_contrastive_ner_spark import oracle_sql as OSQL
+from runne_contrastive_ner_spark.operators.mentions import extract_mentions
+from runne_contrastive_ner_spark.sources.transcripts import from_documents
 
 # texts that exercise the newline hard break, multi-line merging, and mixed
 # whitespace gaps around gazetteer surfaces
@@ -55,7 +56,7 @@ def newline_dir(tmp_path_factory):
 def test_mention_oracle_matches_engine_on_newline_text(spark, newline_dir):
     eng = sorted(
         tuple(r)
-        for r in entry_mod.kg_mentions(spark, newline_dir)
+        for r in extract_mentions(from_documents(spark, newline_dir))
         .select("conv_id", "turn_idx", "type", "start", "end", "surface_norm")
         .collect()
     )
@@ -76,7 +77,7 @@ def test_mention_oracle_matches_engine_on_newline_text(spark, newline_dir):
 
 
 def test_newline_vs_space_merge_semantics(spark, newline_dir):
-    rows = entry_mod.kg_mentions(spark, newline_dir).collect()
+    rows = extract_mentions(from_documents(spark, newline_dir)).collect()
     by_doc = {}
     for r in rows:
         # conv-0000 turn 0 is doc 0 etc. (doc_id = turn_idx*40 + conv bucket)
@@ -90,317 +91,3 @@ def test_newline_vs_space_merge_semantics(spark, newline_dir):
     assert len(by_doc[doc_key(2)]) == 1   # newline + lowercase merges
     assert len(by_doc[doc_key(3)]) == 1   # tab gap merges
     assert len(by_doc[doc_key(10)]) == 1  # 'spark\nspark' merges
-
-
-def test_corpus_selection_gates_compose(spark):
-    """Every selected doc passes all four gate families; every excluded doc
-    fails at least one (selection = lang ∧ quality ∧ repetition ∧
-    dedup-survivor). The repetition legs are the Gopher word-gram gates."""
-    from pyspark.sql import functions as F
-
-    from runne_contrastive_ner_spark.operators.dedup import dedup_clusters
-    from runne_contrastive_ner_spark.operators.textstats import (
-        CORPUS_MAX_DUP_TRIGRAM,
-        CORPUS_MAX_TOP_BIGRAM,
-        CORPUS_MIN_QUALITY,
-        corpus_selection,
-        lang_id_heuristic,
-        quality_scores,
-    )
-
-    sf = "/root/testdata/sf0.01"
-    sel = {r.doc_id for r in corpus_selection(spark, sf).collect()}
-    qrows = {r.doc_id: r for r in quality_scores(spark, sf).collect()}
-    lang = {r.doc_id: r.pred_lang for r in lang_id_heuristic(spark, sf).collect()}
-    losers = {
-        r.doc_id
-        for r in dedup_clusters(spark, sf).filter(~F.col("is_survivor")).collect()
-    }
-
-    def passes(d):
-        r = qrows[d]
-        return (
-            lang[d] == "en"
-            and r.quality >= CORPUS_MIN_QUALITY
-            and r.top_bigram_frac <= CORPUS_MAX_TOP_BIGRAM
-            and r.dup_trigram_frac <= CORPUS_MAX_DUP_TRIGRAM
-            and d not in losers
-        )
-
-    assert sel, "gates must keep some documents"
-    for d in sel:
-        assert passes(d)
-    excluded = set(qrows) - sel
-    assert excluded, "gates must drop some documents"
-    for d in excluded:
-        assert not passes(d)
-
-
-def test_corpus_selection_repetition_gate_bites(spark, tmp_path):
-    """A repetition-heavy document that passes quality/lang/dedup is
-    rejected by the Gopher gates and ONLY by them: a 100-token distinct
-    prefix (with enough stopwords for the lang gate and a high quality
-    score) followed by 'buy now ' * 50 puts top_bigram_frac at 50/199 ≈
-    0.251 > 0.20 and dup_trigram_frac well over 0.18, while relaxing the
-    repetition thresholds re-admits the document."""
-    from runne_contrastive_ner_spark.operators.textstats import corpus_selection
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    prefix = []
-    for i in range(90):
-        prefix.append(f"w{i}")
-        if i % 9 == 0:
-            prefix.append("the")
-    rep_text = " ".join(prefix + ["buy", "now"] * 50)
-    extra = spark.createDataFrame(
-        [(999_999, rep_text)], "doc_id long, text string"
-    )
-    sf = str(tmp_path / "sf")
-    (tmp_path / "sf").mkdir()
-    docs.unionByName(extra, allowMissingColumns=True).coalesce(1).write.parquet(
-        f"{sf}/documents.parquet"
-    )
-
-    sel = {r.doc_id for r in corpus_selection(spark, sf).collect()}
-    assert 999_999 not in sel
-    # with the repetition gates relaxed it would have been kept — proves
-    # the rejection came from the repetition legs, not quality/lang/dedup
-    sel_loose = {
-        r.doc_id
-        for r in corpus_selection(
-            spark, sf, max_top_bigram_frac=1.0, max_dup_trigram_frac=1.0
-        ).collect()
-    }
-    assert 999_999 in sel_loose
-
-
-def test_shard_packing_budget_and_selection(spark):
-    """Two-level packing equals single-level streaming packing over the
-    (bucket, doc_id) order within each source, and the selected filter
-    packs exactly the selected docs."""
-    from runne_contrastive_ner_spark.functions.hashing import md5_int
-    from runne_contrastive_ner_spark.operators.textstats import (
-        SHARD_BUCKETS,
-        corpus_selection,
-        shard_packing,
-    )
-
-    sf = "/root/testdata/sf0.01"
-    rows = shard_packing(spark, sf, budget=256).collect()
-    by_source = {}
-    for r in rows:
-        by_source.setdefault(r.source, []).append(r)
-    for src, docs in by_source.items():
-        # the two-level result must be the exclusive-running-sum streaming
-        # pack over docs ordered by (md5 bucket, doc_id) — bucket offsets
-        # make the concatenation seamless
-        docs.sort(key=lambda r: (md5_int(str(r.doc_id)) % SHARD_BUCKETS, r.doc_id))
-        before = 0
-        for r in docs:
-            assert r.shard_idx == before // 256, (src, r)
-            before += r.n_tokens
-    sel = corpus_selection(spark, sf)
-    packed = shard_packing(spark, sf, budget=256, selected=sel)
-    assert {r.doc_id for r in packed.collect()} == {
-        r.doc_id for r in sel.collect()
-    }
-
-
-def test_shard_packing_parallelism_under_giant_source(spark, tmp_path):
-    """VERDICT r3 scale defect: one source holding ~90% of documents must
-    NOT serialize into one window task. With two-level packing the running
-    sum partitions by (source, bucket): assert the giant source's rows
-    spread across all SHARD_BUCKETS window groups and that the per-group
-    row counts are balanced (max/median bounded), the same shape assertion
-    as test_skew.py."""
-    import statistics
-
-    from pyspark.sql import functions as F
-
-    from runne_contrastive_ner_spark.functions.hashing import md5_int
-    from runne_contrastive_ner_spark.operators.textstats import (
-        SHARD_BUCKETS,
-        shard_packing,
-    )
-
-    n = 4000
-    df = spark.range(n).select(
-        F.col("id").alias("doc_id"),
-        F.when(F.col("id") % 10 == 0, "rare").otherwise("giant").alias("source"),
-        F.concat_ws(
-            " ", F.array([F.concat(F.lit("tok"), F.col("id"))] * 7)
-        ).alias("text"),
-    )
-    sf = str(tmp_path / "giantsrc")
-    df.write.parquet(sf + "/documents.parquet")
-    out = shard_packing(spark, sf, budget=64).collect()
-    giant = [r for r in out if r.source == "giant"]
-    assert len(giant) == n - n // 10
-    group_sizes = {}
-    for r in giant:
-        b = md5_int(str(r.doc_id)) % SHARD_BUCKETS
-        group_sizes[b] = group_sizes.get(b, 0) + 1
-    # every bucket participates -> SHARD_BUCKETS-way parallel windows
-    assert len(group_sizes) == SHARD_BUCKETS
-    sizes = sorted(group_sizes.values())
-    assert sizes[-1] / statistics.median(sizes) < 1.5
-    # shard indices stay dense per source: every shard below the max is used
-    shard_ids = {r.shard_idx for r in giant}
-    assert shard_ids == set(range(max(shard_ids) + 1))
-
-
-def test_source_mixture_sqrt_upweights_small_sources(spark, tmp_path):
-    """Temperature mixing at alpha=0.5: a source with 100x the tokens gets
-    only ~10x the weight; every arithmetic step is integer so the result is
-    identical under any parallelism; sampled membership matches the Python
-    md5 mirror document for document."""
-    import math
-
-    from runne_contrastive_ner_spark.functions.hashing import md5_int
-    from runne_contrastive_ner_spark.operators.textstats import (
-        MIXTURE_PPM,
-        source_mixture,
-    )
-
-    rows = []
-    did = 0
-    for src, n_docs, toks_per_doc in [("big", 200, 50), ("small", 10, 10)]:
-        for _ in range(n_docs):
-            rows.append((did, src, " ".join(f"t{i}" for i in range(toks_per_doc))))
-            did += 1
-    sf = str(tmp_path / "mix")
-    spark.createDataFrame(
-        rows, "doc_id long, source string, text string"
-    ).write.parquet(sf + "/documents.parquet")
-
-    out = {r.source: r for r in source_mixture(spark, sf, budget_tokens=400).collect()}
-    big, small = out["big"], out["small"]
-    assert big.total_tokens == 10_000 and small.total_tokens == 100
-    # sqrt weighting: 100x tokens -> 10x weight (quantized)
-    assert abs(big.weight_ppm / small.weight_ppm - 10.0) < 0.01
-    # integer mirror of the threshold formula
-    q_big = math.floor(math.sqrt(10_000) * 1000)
-    q_small = math.floor(math.sqrt(100) * 1000)
-    denom = q_big + q_small
-    assert big.keep_ppm == min(MIXTURE_PPM, 400 * q_big * MIXTURE_PPM // (denom * 10_000))
-    assert small.keep_ppm == min(MIXTURE_PPM, 400 * q_small * MIXTURE_PPM // (denom * 100))
-    # membership replays the md5 rule exactly
-    for src, n_docs, toks, rec in [("big", 200, 50, big), ("small", 10, 10, small)]:
-        ids = [d for d, s, _ in rows if s == src]
-        kept = [d for d in ids if md5_int(str(d)) % MIXTURE_PPM < rec.keep_ppm]
-        assert rec.sampled_docs == len(kept)
-        assert rec.sampled_tokens == len(kept) * toks
-    # the sample lands in the budget's neighborhood without exceeding the
-    # per-source expectation systematically (hash-uniformity at this n)
-    total_sampled = big.sampled_tokens + small.sampled_tokens
-    assert 0 < total_sampled < 4 * 400
-
-
-def test_token_quantiles_nearest_rank_exact(spark, tmp_path):
-    """Nearest-rank quantiles against numpy's 'inverted_cdf' on a known
-    distribution, plus the single-doc edge (every quantile = that value)."""
-    import numpy as np
-
-    from runne_contrastive_ner_spark.operators.textstats import token_quantiles
-
-    vals = [1, 2, 2, 3, 5, 8, 13, 21, 34, 100]  # n=10, known ranks
-    rows = [(i, "a", " ".join(["t"] * v)) for i, v in enumerate(vals)]
-    rows.append((99, "solo", "x y z"))
-    sf = str(tmp_path / "tq")
-    spark.createDataFrame(
-        rows, "doc_id long, source string, text string"
-    ).write.parquet(sf + "/documents.parquet")
-    out = {r.source: r for r in token_quantiles(spark, sf).collect()}
-    a = out["a"]
-    arr = np.array(sorted(vals))
-    for ppm, col in [(0.25, "p25"), (0.5, "p50"), (0.75, "p75"),
-                     (0.9, "p90"), (0.99, "p99")]:
-        # nearest-rank: value at ceil(q*n)
-        want = int(arr[max(0, int(np.ceil(ppm * len(arr))) - 1)])
-        assert getattr(a, col) == want, (col, getattr(a, col), want)
-    solo = out["solo"]
-    assert (solo.p25, solo.p50, solo.p75, solo.p90, solo.p99) == (3,) * 5
-    assert a.n_docs_total == 10 and solo.n_docs_total == 1
-
-
-def test_quality_repetition_stats(spark, tmp_path):
-    """Gopher-style repetition signals: top-bigram occurrence share and
-    duplicate-trigram share, hand-computed on crafted shapes (heavy
-    repetition, single-token, empty text) and cross-checked against the
-    DuckDB oracle on the same synthetic table — edge shapes the driver
-    corpus does not exercise."""
-    import duckdb
-
-    from runne_contrastive_ner_spark.operators.textstats import quality_scores
-
-    rows = [
-        (1, "a b a b a b"),   # 5 bigrams, top 'a b'=3; 4 trigrams, 2 dup
-        (2, "x"),             # no bigrams/trigrams
-        (3, ""),              # no tokens at all
-        (4, "u v w"),         # all grams distinct
-        (5, "t t t t"),       # 3 bigrams all 't t'; 2 trigrams, 1 dup
-    ]
-    sf = str(tmp_path / "rep")
-    spark.createDataFrame(
-        [(d, t, "s") for d, t in rows], "doc_id long, text string, source string"
-    ).write.parquet(sf + "/documents.parquet")
-
-    out = {r.doc_id: r for r in quality_scores(spark, sf).collect()}
-    assert (out[1].top_bigram_n, out[1].top_bigram_frac) == (3, 0.6)
-    assert (out[1].dup_trigram_n, out[1].dup_trigram_frac) == (2, 0.5)
-    assert (out[2].top_bigram_n, out[2].top_bigram_frac) == (0, 0.0)
-    assert (out[3].dup_trigram_n, out[3].dup_trigram_frac) == (0, 0.0)
-    assert (out[4].top_bigram_n, out[4].top_bigram_frac) == (1, 0.5)
-    assert out[4].dup_trigram_frac == 0.0
-    assert (out[5].top_bigram_n, out[5].top_bigram_frac) == (3, 1.0)
-    assert (out[5].dup_trigram_n, out[5].dup_trigram_frac) == (1, 0.5)
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf}/documents.parquet/*.parquet')"
-    )
-    want = con.execute(
-        OSQL.TEXTSTATS["ts_quality_scores"] + " ORDER BY doc_id"
-    ).fetchall()
-    got = [
-        tuple(r)
-        for r in sorted(out.values(), key=lambda r: r.doc_id)
-    ]
-    assert got == [tuple(w) for w in want]
-
-
-def test_decontamination_flags_exact_ngram_overlap(spark, tmp_path):
-    """Benchmark decontamination (new r8): docs sharing a word 4-gram with
-    the benchmark partition (doc_id % 97 == 0) are flagged with the count
-    of DISTINCT shared grams; benchmark docs themselves never appear; a
-    3-token overlap is below the n-gram size and stays clean; repeating
-    the same shared gram does not inflate the count. The join side is
-    explicitly broadcast (the 100 TB shape: corpus never shuffles before
-    the match)."""
-    from runne_contrastive_ner_spark.operators.textstats import decontamination
-
-    rows = [
-        (0, "alpha beta gamma delta epsilon zeta"),        # benchmark
-        (97, "one two three four five"),                    # benchmark
-        (1, "x beta gamma delta epsilon y"),                # 1 shared 4-gram
-        (2, "alpha beta gamma delta epsilon"),              # 2 shared 4-grams
-        (3, "totally clean text with no overlap at all"),   # clean
-        (4, "beta gamma delta q r s"),                      # only 3 shared toks
-        (5, "one two three four one two three four"),       # same gram twice
-    ]
-    sf = str(tmp_path / "sfdc")
-    (tmp_path / "sfdc").mkdir()
-    spark.createDataFrame(rows, "doc_id long, text string").coalesce(1).write.parquet(
-        f"{sf}/documents.parquet"
-    )
-    out = decontamination(spark, sf)
-    got = {r.doc_id: r.n_shared_ngrams for r in out.collect()}
-    assert got == {1: 1, 2: 2, 5: 1}
-    import io as _io
-    import contextlib as _ctx
-
-    buf = _io.StringIO()
-    with _ctx.redirect_stdout(buf):
-        out.explain("formatted")
-    assert "BroadcastHashJoin" in buf.getvalue()

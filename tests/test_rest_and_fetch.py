@@ -1,26 +1,19 @@
-"""S8 REST serving + S7 model fetch — full contract tests against live
-local HTTP (stdlib servers on 127.0.0.1, no network).
+"""S8 REST serving — full contract tests against live local HTTP (a
+stdlib server on 127.0.0.1, no network).
 
 The REST tests pin the reference server's behavior (server.py:74-122 input
 polymorphism, :185-204 enrichment, :207-284 routes/status codes): /ready,
 /recognize on str | list[str] | list[dict with text], 400 on malformed
 input, and span-for-span agreement with detect_mentions_in_text — the same
 kernel the Spark pipeline distributes.
-
-The fetch tests replay download_ner (server.py:26-48): one API hop that
-answers {"href": ...}, a streamed zip download with the content-length
-truncation check, extraction, archive cleanup.
 """
 
 from __future__ import annotations
 
-import io
 import json
 import threading
 import urllib.error
 import urllib.request
-import zipfile
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import pytest
 
@@ -149,105 +142,3 @@ def test_recognize_rejects_bad_input(server_url, payload, needle):
     code, body = _post(server_url, payload)
     assert code == 400
     assert needle in body["message"]
-
-
-# --- model fetch -------------------------------------------------------------
-
-def _artifact_zip(truncate: bool = False) -> bytes:
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as zf:
-        zf.writestr(
-            "dp_rubert_from_siamese/ner.json",
-            json.dumps(
-                {
-                    "named_entities": ["PERSON"],
-                    "max_sent_len": 32,
-                    "bert": "bert",
-                    "base_name": "x",
-                }
-            ),
-        )
-        zf.writestr("dp_rubert_from_siamese/ner.h5", b"\x89HDF\r\n")
-        zf.writestr(
-            "dp_rubert_from_siamese/bert/config.json",
-            json.dumps({"model_type": "bert"}),
-        )
-    return buf.getvalue()
-
-
-@pytest.fixture()
-def fetch_endpoint():
-    """Local stand-in for the cloud share: /api answers {"href": ...},
-    /model.zip streams the archive (optionally lying about its length)."""
-    state = {"lie_about_length": False}
-    zip_bytes = _artifact_zip()
-
-    class Handler(BaseHTTPRequestHandler):
-        def log_message(self, fmt, *args):
-            pass
-
-        def do_GET(self):
-            if self.path.startswith("/api"):
-                body = json.dumps(
-                    {"href": f"http://127.0.0.1:{self.server.server_address[1]}/model.zip"}
-                ).encode()
-                self.send_response(200)
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
-            elif self.path == "/model.zip":
-                n = len(zip_bytes) + (999 if state["lie_about_length"] else 0)
-                self.send_response(200)
-                self.send_header("Content-Length", str(n))
-                self.end_headers()
-                self.wfile.write(zip_bytes)
-            else:
-                self.send_response(404)
-                self.end_headers()
-
-    srv = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    yield f"http://127.0.0.1:{srv.server_address[1]}", state
-    srv.shutdown()
-
-
-def test_fetch_model_roundtrip(fetch_endpoint, tmp_path):
-    import os
-
-    from tools.fetch_model import ARCHIVE_NAME, fetch_model
-
-    base, _ = fetch_endpoint
-    got = fetch_model(
-        str(tmp_path), api_url=f"{base}/api?", public_key="whatever"
-    )
-    assert got.endswith("dp_rubert_from_siamese")
-    assert os.path.isfile(os.path.join(got, "ner.json"))
-    assert os.path.isfile(os.path.join(got, "ner.h5"))
-    # archive cleaned up, like the reference
-    assert not os.path.exists(os.path.join(str(tmp_path), ARCHIVE_NAME))
-
-
-def test_fetch_model_truncation_detected(fetch_endpoint, tmp_path):
-    from tools.fetch_model import fetch_model
-
-    base, state = fetch_endpoint
-    state["lie_about_length"] = True
-    with pytest.raises(ValueError, match="truncated"):
-        fetch_model(str(tmp_path), api_url=f"{base}/api?", public_key="k")
-
-
-def test_fetch_model_rejects_non_artifact_zip(fetch_endpoint, tmp_path):
-    import io as _io
-    import zipfile as _zf
-
-    from tools.fetch_model import fetch_model
-
-    buf = _io.BytesIO()
-    with _zf.ZipFile(buf, "w") as z:
-        z.writestr("readme.txt", "nothing here")
-    # serve the bogus zip straight via direct_url using a data-path trick:
-    # write it locally and use file:// (urlopen supports file URLs)
-    p = tmp_path / "bogus.zip"
-    p.write_bytes(buf.getvalue())
-    with pytest.raises(ValueError, match="no ner.json"):
-        fetch_model(str(tmp_path / "out"), direct_url=p.as_uri())

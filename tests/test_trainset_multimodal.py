@@ -1,8 +1,6 @@
-"""Tests for the training-prep operators (T8/T9, M12, M13, A3/A4, J3) and
-the multimodal binary-column plumbing."""
+"""Tests for the training-prep operators (T8/T9, M12, M13, A3/A4, J3)."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from runne_contrastive_ner_spark.functions.trainset_kernel import (
     assign_entities_to_sentences,
@@ -11,10 +9,7 @@ from runne_contrastive_ner_spark.functions.trainset_kernel import (
     indicator_for_type,
 )
 from runne_contrastive_ner_spark.functions.tokenizer import tokenize_text
-from runne_contrastive_ner_spark.operators import multimodal as mm
 from runne_contrastive_ner_spark.operators.trainset import build_ner_trainset
-
-SF_DIR = "/root/testdata/sf0.001"
 
 
 class TestTrainsetKernel:
@@ -153,28 +148,3 @@ class TestSiameseTrainset:
         again = build_siamese_trainset(self._docs(spark), per_type=4).collect()
         key = lambda p: (p.label, tuple(p.left_ids), tuple(p.left_mask), tuple(p.right_ids), tuple(p.right_mask))  # noqa: E731
         assert sorted(map(key, pairs)) == sorted(map(key, again))
-
-
-class TestMultimodal:
-    def test_media_schema_and_payload(self, spark):
-        media = mm.synthesize_media(spark, SF_DIR)
-        row = media.first()
-        assert set(media.columns) == {"doc_id", "kind", "payload", "meta"}
-        assert isinstance(row.payload, bytearray | bytes)
-        assert row.meta.width >= 16 and row.meta.codec in ("png", "opus", "h264")
-
-    def test_feature_extraction_stub(self, spark):
-        feats = mm.media_features(mm.synthesize_media(spark, SF_DIR))
-        row = feats.first()
-        assert len(row.features) == 8
-        assert all(0.0 <= v <= 1.0 for v in row.features)
-
-    def test_real_decoder_clearly_stubbed(self, spark):
-        with pytest.raises(NotImplementedError, match="codec"):
-            mm.media_features(mm.synthesize_media(spark, SF_DIR), decoder="real")
-
-    def test_frame_sampling(self, spark):
-        frames = mm.video_frame_sample(mm.synthesize_media(spark, SF_DIR))
-        per_doc = frames.groupBy("doc_id").count().agg(F.max("count")).collect()[0][0]
-        assert 1 <= per_doc <= 4
-        assert frames.filter((F.col("checksum") < 0) | (F.col("checksum") > 255)).count() == 0
