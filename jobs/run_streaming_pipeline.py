@@ -126,7 +126,7 @@ def run_streaming(
     }
     if analytics:
         # exact freshness keyed on the edge-set fingerprint: a tail that
-        # did not change the co-occurrence graph skips every stage. The
+        # did not change the co-occurrence graph skips the rebuild. The
         # hyperparameters MUST match the pipeline config that built the
         # warehouse (same flags as run_kg_pipeline) or a rebuild silently
         # changes what the centrality scores mean.
@@ -138,13 +138,6 @@ def run_streaming(
         )
         out["analytics_rebuilt"] = a_stats.get("rebuilt", [])
         out["analytics_rows"] = a_stats.get("rows")
-        # component-scoped evidence: when the rebuild reused unchanged
-        # connected components, say so (and how much work it avoided)
-        out["analytics_scoped"] = a_stats.get("scoped", False)
-        for k in ("components_total", "components_unchanged",
-                  "sub_edges", "edges_total"):
-            if k in a_stats:
-                out[f"analytics_{k}"] = a_stats[k]
     return out
 
 
@@ -156,7 +149,7 @@ def main() -> None:
     ap.add_argument(
         "--analytics",
         action="store_true",
-        help="after the fold, refresh the materialized analytics tables "
+        help="after the fold, refresh the materialized analytics table "
         "(skips entirely when the co-occurrence graph is unchanged)",
     )
     ap.add_argument(
@@ -169,8 +162,8 @@ def main() -> None:
         "--analytics-buckets",
         type=int,
         default=16,
-        help="bucket count for the analytics component tables (match the "
-        "batch pipeline's link_buckets)",
+        help="bucket count of the analytics table (match the batch "
+        "pipeline's link_buckets)",
     )
     args = ap.parse_args()
 

@@ -57,6 +57,19 @@ def cooccurrence_edges(triples: DataFrame) -> DataFrame:
 
 SMALL_GRAPH_EDGES = 100_000
 
+
+def _id_type(nbrs: DataFrame) -> str:
+    """DDL type of the node ids: driver-built outputs keep the input's id
+    type, as the distributed paths do."""
+    return nbrs.schema["src"].dataType.simpleString()
+
+
+def _driver_result(nbrs: DataFrame, values: dict, value_ddl: str) -> DataFrame:
+    """``(src, <value>)`` rows from a driver kernel's per-node dict."""
+    return nbrs.sparkSession.createDataFrame(
+        sorted(values.items()), f"src {_id_type(nbrs)}, {value_ddl}"
+    )
+
 # test-observability hook: inner peel rounds executed by the last
 # DISTRIBUTED k_core_numbers call (tests assert the degeneracy-derived
 # bound on deep graphs); runtime code never reads it
@@ -124,12 +137,7 @@ def pagerank(
     if n_edges <= small_graph_edges:
         edges = [(r[0], r[1]) for r in nbrs.collect()]  # bounded by contract
         pr = _pagerank_local(edges, iterations, damping_pct, scale)
-        spark = nbrs.sparkSession
-        if not pr:
-            return spark.createDataFrame([], "src string, pr_q long")
-        return spark.createDataFrame(
-            sorted(pr.items()), "src string, pr_q long"
-        )
+        return _driver_result(nbrs, pr, "pr_q long")
     deg = nbrs.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("deg"))
     n = deg.count()  # bounded scalar: one number for the teleport term
     if n == 0:
@@ -201,13 +209,8 @@ def triangle_counts(
     """
     nbrs = nbrs.localCheckpoint(eager=True)
     if nbrs.count() <= small_graph_edges:
-        spark = nbrs.sparkSession
         counts = _triangles_local([(r[0], r[1]) for r in nbrs.collect()])
-        if not counts:
-            return spark.createDataFrame([], "src string, n_triangles long")
-        return spark.createDataFrame(
-            sorted(counts.items()), "src string, n_triangles long"
-        )
+        return _driver_result(nbrs, counts, "n_triangles long")
     deg = nbrs.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("deg"))
     und = nbrs.filter(F.col("src") < F.col("dst"))
     da = deg.select(F.col("src").alias("u"), F.col("deg").alias("dega"))
@@ -287,15 +290,10 @@ def label_propagation(
 
     nbrs = nbrs.localCheckpoint(eager=True)
     if nbrs.count() <= small_graph_edges:
-        spark = nbrs.sparkSession
         lab_map = _label_prop_local(
             [(r[0], r[1]) for r in nbrs.collect()], iterations
         )
-        if not lab_map:
-            return spark.createDataFrame([], "src string, community string")
-        return spark.createDataFrame(
-            sorted(lab_map.items()), "src string, community string"
-        )
+        return _driver_result(nbrs, lab_map, f"community {_id_type(nbrs)}")
     lab = nbrs.select("src").distinct().withColumn("lab", F.col("src"))
     pick = Window.partitionBy("node").orderBy(F.desc("c"), F.asc("lab"))
     for _ in range(iterations):
@@ -386,14 +384,9 @@ def k_core_numbers(
     the vanished leg)."""
     global _LAST_PEEL_ROUNDS
     nbrs = nbrs.localCheckpoint(eager=True)
-    spark = nbrs.sparkSession
     if nbrs.count() <= small_graph_edges:
         core = _kcore_local([(r[0], r[1]) for r in nbrs.collect()])
-        if not core:
-            return spark.createDataFrame([], "src string, core long")
-        return spark.createDataFrame(
-            [(n, c) for n, c in sorted(core.items())], "src string, core long"
-        )
+        return _driver_result(nbrs, core, "core long")
     remaining = nbrs
     parts: list[DataFrame] = []
     k = 1
@@ -432,5 +425,5 @@ def k_core_numbers(
                 ]
         k += 1
     if not parts:
-        return spark.createDataFrame([], "src string, core long")
+        return _driver_result(nbrs, {}, "core long")
     return functools.reduce(DataFrame.unionByName, parts)

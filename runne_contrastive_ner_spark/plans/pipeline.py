@@ -1,8 +1,12 @@
-"""The five-stage KG-construction pipeline (SURVEY.md §3.4).
+"""The staged KG-construction pipeline (SURVEY.md §3.4).
 
     transcripts ─▶ mentions ─▶ entities/edges (linking + CC) ─▶ triples
-                                             └▶ materialized node/edge/triple
-                                                tables with manifests
+                                                      └▶ analytics (optional)
+
+Four stages always run — ``mentions``, ``entities``, ``edges`` and
+``triples`` — and ``PipelineConfig(analytics=True)`` adds a fifth,
+``analytics``: one per-entity table of PageRank, triangle count, community
+and core number over the triples' co-occurrence graph.
 
 Each stage writes its output table through TableIO before the next starts —
 the write IS the checkpoint; ``StageRunner`` skips stages whose manifest
@@ -60,20 +64,24 @@ class PipelineConfig:
     # natively). bucket_link_tables=False restores the conv_bucket-dir layout.
     bucket_link_tables: bool = True
     link_buckets: int = 16
-    # optional 5th stage: materialize per-entity graph analytics (PageRank
-    # centrality) over the triple table, with its own manifest/resume
+    # optional 5th stage: per-entity graph analytics (PageRank, triangles,
+    # community, core number) over the triple table, with its own manifest
     analytics: bool = False
     pagerank_iterations: int = 3
+
+
+# label-propagation rounds of the analytics ``community`` column: one
+# constant shared by the build and its stage fingerprint
+ANALYTICS_LP_ITERATIONS = 4
 
 
 def fold_analytics(
     pr: DataFrame, tri: DataFrame, comm: DataFrame, core: DataFrame
 ) -> DataFrame:
-    """The analytics fold: 4-way left join of the per-entity component
-    tables on the entity id. In the staged pipeline the four inputs are
-    TableIO snapshots BUCKETED on ``src`` (VERDICT r6 item 5), so this
-    join chain runs with ZERO Exchange — the shuffle was paid once at the
-    component writes."""
+    """The analytics row per entity from the four graph operators' outputs:
+    a left join on the node id. Every node has a PageRank row; nodes in no
+    triangle get 0 triangles, and a missing community or core falls back to
+    the node itself and 0."""
     return (
         pr.join(tri, "src", "left")
         .join(comm, "src", "left")
@@ -88,29 +96,57 @@ def fold_analytics(
     )
 
 
-def analytics_table(triples: DataFrame, pagerank_iterations: int = 3) -> DataFrame:
-    """One analytics row per entity: centrality + triangle participation +
-    community label + core number, all over the SAME materialized edge list
-    (checkpointed once inside each operator; the four are independent
-    equi-join/groupBy chains folded by a 4-way left join on the entity id).
-    Direct (un-staged) composition for ad-hoc callers; the pipeline's
-    analytics stage materializes each component bucketed and folds them
-    exchange-free instead."""
-    from ..operators.graph import (
-        cooccurrence_edges,
-        k_core_numbers,
-        label_propagation,
-        pagerank,
-        triangle_counts,
-    )
+def _build_analytics(
+    triples: DataFrame, pagerank_iterations: int, edges: DataFrame | None = None
+) -> tuple[DataFrame, str]:
+    """The analytics table and the fingerprint of the edge list it derives
+    from. The co-occurrence edges are derived once (or taken from
+    ``edges``). A graph of at most ``graph.SMALL_GRAPH_EDGES`` edges is
+    collected once, with each edge's hash for the fingerprint, and the four
+    driver kernels the operators use on such graphs run over that one list.
+    A larger graph is checkpointed and folded from the four operators, each
+    of which takes its distributed path."""
+    from ..operators import graph
+    from ..streaming.incremental import edges_fingerprint, edges_fingerprint_of
 
-    edges_g = cooccurrence_edges(triples)
-    return fold_analytics(
-        pagerank(edges_g, iterations=pagerank_iterations),
-        triangle_counts(edges_g),
-        label_propagation(edges_g, iterations=ANALYTICS_LP_ITERATIONS),
-        k_core_numbers(edges_g),
+    if edges is None:
+        edges = graph.cooccurrence_edges(triples)
+    limit = graph.SMALL_GRAPH_EDGES
+    rows = (
+        edges.select("src", "dst", F.xxhash64("src", "dst"))
+        .limit(limit + 1)
+        .collect()
     )
+    if len(rows) > limit:
+        edges = edges.localCheckpoint(eager=True)
+        table = fold_analytics(
+            graph.pagerank(edges, iterations=pagerank_iterations),
+            graph.triangle_counts(edges),
+            graph.label_propagation(edges, iterations=ANALYTICS_LP_ITERATIONS),
+            graph.k_core_numbers(edges),
+        )
+        return table, edges_fingerprint(edges)
+    pairs = [(r[0], r[1]) for r in rows]
+    pr = graph._pagerank_local(
+        pairs, pagerank_iterations, damping_pct=85, scale=graph.SCALE
+    )
+    tri = graph._triangles_local(pairs)
+    comm = graph._label_prop_local(pairs, ANALYTICS_LP_ITERATIONS)
+    core = graph._kcore_local(pairs)
+    id_type = graph._id_type(edges)
+    table = edges.sparkSession.createDataFrame(
+        [(n, pr[n], tri.get(n, 0), comm.get(n, n), core.get(n, 0)) for n in sorted(pr)],
+        f"entity_id {id_type}, pr_q long, n_triangles long, "
+        f"community {id_type}, core long",
+    )
+    return table, edges_fingerprint_of([r[2] for r in rows])
+
+
+def analytics_table(triples: DataFrame, pagerank_iterations: int = 3) -> DataFrame:
+    """One analytics row per entity of the co-occurrence graph: PageRank
+    centrality, triangle count, label-propagation community and core
+    number. The same build the pipeline's ``analytics`` stage writes."""
+    return _build_analytics(triples, pagerank_iterations)[0]
 
 
 @dataclass
@@ -123,14 +159,6 @@ class PipelineResult:
     analytics: DataFrame | None = None
 
 
-# label-propagation rounds for the analytics_comm component — ONE constant
-# shared by the batch build, its fingerprint, AND the scoped refresh's
-# changed-component recompute (review finding: an implicit reliance on the
-# operator's default could let the two drift, silently mixing iteration
-# counts inside one certified table)
-ANALYTICS_LP_ITERATIONS = 4
-
-
 def run_analytics_stages(
     runner,
     triples: DataFrame,
@@ -138,173 +166,45 @@ def run_analytics_stages(
     pagerank_iterations: int = 3,
     buckets: int = 16,
     edges: DataFrame | None = None,
-    edges_fp: str | None = None,
-    seeded_by_graph: bool = False,
     triples_snapshot: int | None = None,
-    component_builds: dict | None = None,
 ) -> DataFrame:
-    """The analytics stage group: the four per-entity component tables are
-    materialized BUCKETED on the entity id (one shuffle each, paid at
-    write), and the 4-way fold joins the co-located scans with zero
-    Exchange. Each component resumes independently (changing
-    pagerank_iterations recomputes pagerank + the fold, not triangles /
-    communities / core). ``fp_seed`` keys the stage fingerprints: the batch
-    pipeline seeds with its config lineage (link fingerprint + window_k);
-    the incremental refresh (streaming/incremental.refresh_analytics) seeds
-    with the EDGE-SET fingerprint and passes ``seeded_by_graph=True``.
+    """The ``analytics`` stage: ``analytics_table`` over ``triples``,
+    bucketed on ``entity_id``. ``fp_seed`` keys the stage fingerprint: the
+    batch pipeline seeds it with its config lineage (link fingerprint +
+    window_k), ``refresh_analytics`` with the edge-set fingerprint. Pass an
+    already derived ``edges`` list to skip deriving it again.
 
-    FRESHNESS RECORDING (what refresh_analytics later trusts): the fold
-    manifest gets ``edges_fp`` / ``triples_snapshot`` / hyperparameter
-    extras ONLY when every component table provably derives from the
-    CURRENT graph — i.e. all four components rebuilt in THIS invocation,
-    or the stage fingerprints are graph-seeded (then even a skipped
-    component's fingerprint embeds the current edge fingerprint). A batch
-    run whose config fingerprints let stale components skip after an
-    out-of-band incremental merge must NOT mint a freshness proof for
-    them (review finding). Pass a pre-checkpointed ``edges`` (and its
-    ``edges_fp``, if already computed) to avoid re-deriving them.
+    Every build records what ``refresh_analytics`` later trusts as its
+    freshness proof: the fingerprint of the edge list it derived
+    (``edges_fp``), the triples snapshot version ``triples_snapshot`` the
+    caller pinned BEFORE reading the triples (re-reading the live pointer
+    here could stamp a concurrent merge's version onto content derived from
+    the older snapshot), and the two hyperparameters."""
+    extra: dict = {}
 
-    ``component_builds`` (incremental refresh only): replacement build
-    callables keyed ``'tri'``/``'comm'``/``'core'`` — the component-scoped
-    refresh path passes merged builds (reused unchanged-component rows +
-    recompute over changed components only) whose CONTENT equals the full
-    operator over the whole graph (property-tested). PageRank is never
-    overridden: its teleport term uses the global node count, so it is
-    only component-local when the node set is provably unchanged — this
-    engine recomputes it globally instead of shipping that cliff. Only
-    meaningful with graph-seeded fingerprints (the override is content-
-    equal for THIS graph, so a skip on a matching graph-seeded
-    fingerprint stays sound)."""
-    from ..operators.graph import (
-        cooccurrence_edges,
-        k_core_numbers,
-        label_propagation,
-        pagerank,
-        triangle_counts,
-    )
-
-    estate: dict = {}
-    if edges is not None:
-        estate["e"] = edges
-    if edges_fp is not None:
-        estate["efp"] = edges_fp
-    built: set = set()
-    fold_extra: dict = {}
-
-    def _edges_g() -> DataFrame:
-        # shared edge list, derived once from the materialized triples and
-        # pinned so four component builds don't re-derive it; its
-        # fingerprint (one aggregation over the checkpointed list — cheap
-        # next to the iterative ops) is computed alongside
-        if "e" not in estate:
-            estate["e"] = cooccurrence_edges(triples).localCheckpoint(eager=True)
-        if "efp" not in estate:
-            from ..streaming.incremental import edges_fingerprint
-
-            estate["efp"] = edges_fingerprint(estate["e"])
-        return estate["e"]
-
-    def _component(name, fn):
-        def build():
-            built.add(name)
-            return fn()
-
-        return build
-
-    a_spec = {"cols": ["src"], "n": buckets, "sort": ["src"]}
-    # ``buckets`` joins every COMPONENT fingerprint, not just the fold's
-    # (ADVICE r7): the component tables are physically bucketed at write,
-    # so a bucket-count change must rebuild them with the new layout —
-    # previously they skipped on a matching fingerprint while the tier-2/3
-    # refresh stamped the new value into the manifest, silently degrading
-    # the exchange-free fold guarantee. Cost of the fix: warehouses built
-    # before this release recompute the analytics group once on upgrade
-    # (safe — content is re-derived, never wrong).
-    pr_fp = fingerprint("analytics-pr", fp_seed, pagerank_iterations, buckets)
-    tri_fp = fingerprint("analytics-tri", fp_seed, buckets)
-    comm_fp = fingerprint("analytics-comm", fp_seed, ANALYTICS_LP_ITERATIONS, buckets)
-    core_fp = fingerprint("analytics-core", fp_seed, buckets)
-    overrides = component_builds or {}
-    pr = runner.run(
-        "analytics_pr",
-        pr_fp,
-        _component("pr", lambda: pagerank(_edges_g(), iterations=pagerank_iterations)),
-        lineage_key="src",
-        bucket_spec=a_spec,
-    )
-    tri = runner.run(
-        "analytics_tri",
-        tri_fp,
-        _component(
-            "tri", overrides.get("tri") or (lambda: triangle_counts(_edges_g()))
-        ),
-        lineage_key="src",
-        bucket_spec=a_spec,
-    )
-    comm = runner.run(
-        "analytics_comm",
-        comm_fp,
-        _component(
-            "comm",
-            overrides.get("comm")
-            or (
-                lambda: label_propagation(
-                    _edges_g(), iterations=ANALYTICS_LP_ITERATIONS
-                )
-            ),
-        ),
-        lineage_key="src",
-        bucket_spec=a_spec,
-    )
-    core = runner.run(
-        "analytics_core",
-        core_fp,
-        _component(
-            "core", overrides.get("core") or (lambda: k_core_numbers(_edges_g()))
-        ),
-        lineage_key="src",
-        bucket_spec=a_spec,
-    )
-
-    def _fold_build():
-        sound = seeded_by_graph or built == {"pr", "tri", "comm", "core"}
-        if sound and "efp" in estate:
-            fold_extra["edges_fp"] = estate["efp"]
-            # the triples SNAPSHOT VERSION this build derives from —
-            # refresh tier 1 compares it to skip even the edge-list
-            # derivation when nothing merged. MUST be the version the
-            # caller pinned BEFORE reading triples: re-reading the live
-            # pointer here would stamp a concurrent merge's version onto
-            # content derived from the older snapshot (review finding —
-            # a false tier-1 proof).
-            fold_extra["triples_snapshot"] = triples_snapshot
-            fold_extra["pagerank_iterations"] = pagerank_iterations
-            fold_extra["buckets"] = buckets
-            # the component manifest fingerprints this fold actually folded:
-            # the scoped refresh refuses to REUSE a component table whose
-            # current manifest no longer matches (review finding: a crashed
-            # partial batch rebuild can leave one component holding another
-            # graph's content while the fold manifest still vouches for the
-            # old proof)
-            fold_extra["component_fps"] = {
-                "analytics_pr": pr_fp,
-                "analytics_tri": tri_fp,
-                "analytics_comm": comm_fp,
-                "analytics_core": core_fp,
-            }
-        return fold_analytics(pr, tri, comm, core)
+    def build() -> DataFrame:
+        table, edges_fp = _build_analytics(triples, pagerank_iterations, edges)
+        extra.update(
+            edges_fp=edges_fp,
+            triples_snapshot=triples_snapshot,
+            pagerank_iterations=pagerank_iterations,
+            buckets=buckets,
+        )
+        return table
 
     return runner.run(
         "analytics",
-        fingerprint("analytics-v4", pr_fp, tri_fp, comm_fp, core_fp, buckets),
-        _fold_build,
+        fingerprint(
+            "analytics-v5",
+            fp_seed,
+            pagerank_iterations,
+            ANALYTICS_LP_ITERATIONS,
+            buckets,
+        ),
+        build,
         lineage_key="entity_id",
-        bucket_spec={
-            "cols": ["entity_id"],
-            "n": buckets,
-            "sort": ["entity_id"],
-        },
-        extra=fold_extra,
+        bucket_spec={"cols": ["entity_id"], "n": buckets, "sort": ["entity_id"]},
+        extra=extra,
     )
 
 
@@ -457,20 +357,15 @@ def run_pipeline(
                 "triples"
             ),
         )
-        # clear any staleness marker a previous incremental fold left
-        # behind ONLY when the fold manifest now PROVES freshness against
-        # the current triples snapshot (run_analytics_stages records that
-        # proof exactly when every component derives from the current
-        # graph). A partial rebuild over stale skipped components, or a
-        # full skip after an out-of-band merge, leaves the marker — and
-        # the STALE warning — in force; refresh_analytics is the path
-        # that re-establishes freshness there (review finding).
-        from .manifest import load_manifest
+        # clear the staleness marker a previous incremental fold left
+        # behind only when the analytics manifest proves freshness against
+        # the current triples snapshot: a build always does, a skip after
+        # an out-of-band merge does not, and leaves the marker (and the
+        # STALE warning) for refresh_analytics to clear
         from ..streaming.incremental import clear_analytics_stale
 
-        _mf = load_manifest(io.path("analytics"))
-        _rec = None if _mf is None else _mf.extra.get("triples_snapshot")
-        if _rec is not None and _rec == getattr(
+        recorded = runner.metrics["analytics"].extra.get("triples_snapshot")
+        if recorded is not None and recorded == getattr(
             io, "current_version", lambda _t: None
         )("triples"):
             clear_analytics_stale(cfg.warehouse)

@@ -20,7 +20,9 @@ shapes a production deployment layers on top:
 
 from __future__ import annotations
 
+import functools
 import json
+import operator
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -291,7 +293,7 @@ def incremental_kg_fold(
         prune_partitions=True,
     )
     # the merged triples MAY have changed the co-occurrence graph, so any
-    # materialized analytics tables are suspect until refresh_analytics
+    # materialized analytics table is suspect until refresh_analytics
     # re-establishes exact freshness (edge-set fingerprint comparison).
     # The marker is a cheap file write — no extra Spark job in the fold.
     # (The zero-delta case returned above without touching any table.)
@@ -335,7 +337,7 @@ def clear_analytics_stale(warehouse: str) -> None:
 
 def analytics_stale_reason(warehouse: str) -> str | None:
     """The staleness contract's read side: non-None when a fold merged
-    triples after the analytics tables were last refreshed. Cleared by
+    triples after the analytics table was last refreshed. Cleared by
     ``refresh_analytics``; surfaced by ``plans.views.register_kg_views``."""
     p = _stale_marker_path(warehouse)
     if not os.path.exists(p):
@@ -375,40 +377,13 @@ def edges_fingerprint(edges: DataFrame) -> str:
     return f"n={row['n']};x={row['x']};s={row['s']}"
 
 
-# warehouse table holding one row per connected component of the
-# co-occurrence graph: (rep, n_edges, h_xor, h_sum). Written by
-# refresh_analytics on every graph-seeded analytics build; its manifest
-# fingerprint binds it to the edge-set fingerprint it was derived from,
-# so a later refresh can trust it as the OLD side of the per-component
-# diff. The batch pipeline does not write it (that would tax every batch
-# build with a CC job); the first refresh after a batch build runs full
-# and minting the table is what makes the SECOND one scoped.
-ANALYTICS_COMPFP = "analytics_compfp"
-
-
-def component_fingerprints(edges: DataFrame, membership: DataFrame) -> DataFrame:
-    """Per-connected-component content fingerprint of a symmetrized edge
-    list: ``(rep, n_edges, h_xor, h_sum)`` where ``rep`` is the component's
-    minimum node id (components.connected_components labels). Same
-    two-combiner scheme as edges_fingerprint, grouped by component — both
-    endpoints of an edge share a component, so joining membership on
-    ``src`` alone assigns every edge exactly once. One equi-join + one
-    groupBy, both keyed on node/component ids — scales."""
-    h = F.xxhash64("src", "dst")
-    return (
-        edges.join(
-            membership.select(
-                F.col("node").alias("src"), F.col("component").alias("rep")
-            ),
-            "src",
-        )
-        .groupBy("rep")
-        .agg(
-            F.count(F.lit(1)).alias("n_edges"),
-            F.bit_xor(h).alias("h_xor"),
-            F.sum(h.cast("decimal(38,0)")).alias("h_sum"),
-        )
-    )
+def edges_fingerprint_of(hashes: list[int]) -> str:
+    """``edges_fingerprint`` from the per-edge ``xxhash64(src, dst)``
+    values of an edge list already collected on the driver: the same count,
+    XOR and exact sum, so no second job over the edges."""
+    if not hashes:
+        return "n=0;x=None;s=None"
+    return f"n={len(hashes)};x={functools.reduce(operator.xor, hashes)};s={sum(hashes)}"
 
 
 def refresh_analytics(
@@ -416,47 +391,26 @@ def refresh_analytics(
     io,
     pagerank_iterations: int = 3,
     buckets: int = 16,
-    scope: str = "auto",
 ) -> dict:
-    """Bring the materialized analytics tables exactly up to date with the
+    """Bring the materialized analytics table exactly up to date with the
     CURRENT triples snapshot after tail ingests (VERDICT r6 item 6).
 
     Three freshness tiers, cheapest first:
     1. triples SNAPSHOT VERSION unchanged since the analytics build (read
-       from the fold manifest) → fresh with ZERO Spark jobs — the path a
-       scheduled refresh takes when no tail arrived;
+       from the analytics manifest) → fresh with ZERO Spark jobs — the path
+       a scheduled refresh takes when no tail arrived;
     2. version moved but the co-occurrence EDGE-SET fingerprint matches
        (a content-neutral merge — new turns re-deriving the same pairs,
        the common tail case) → fresh for one edge scan; the manifest's
        recorded snapshot version is advanced so the next refresh takes
-       tier 1. Works for warehouses built by the BATCH pipeline too: any
-       build of the analytics group records the fingerprint;
-    3. the graph DID change → rebuild, COMPONENT-SCOPED when possible
-       (VERDICT r7 item: a tail that touches one community must not pay
-       for the whole graph). Triangles / communities / core are
-       per-connected-component functions, so when the previous build left
-       a trusted per-component fingerprint table (``analytics_compfp``,
-       manifest-bound to the recorded edge fingerprint), the refresh runs
-       connected components on the new edge list, diffs the per-component
-       fingerprints, REUSES the prior tables' rows for unchanged
-       components and recomputes the three operators only over the
-       changed components' edges — content is then identical to the full
-       operator over the whole graph (property-tested in
-       tests/test_incremental.py, including a reuse/recompute split
-       assertion). PageRank always recomputes globally: its teleport term
-       uses the GLOBAL node count (operators/graph.pagerank), so a
-       component-scoped PageRank delta is only exact when the node set is
-       provably unchanged — rather than ship that conditional cliff, the
-       global recompute stays and the scoped path saves the (costlier)
-       triangle/community/core work. The scoped path costs one CC job +
-       one fingerprint aggregation; its enabling table is minted by every
-       graph-seeded refresh build, so the first refresh after a BATCH
-       build runs full and every subsequent one can scope. Content then
-       equals a from-scratch ``analytics_table`` over the folded triples
-       either way. ``scope``: 'auto' (scope when the trusted diff base
-       exists) or 'full' (always rebuild everything — the knob for
-       paranoid operators and A/B tests). Clears the staleness marker on
-       success."""
+       tier 1. Works for warehouses built by the BATCH pipeline too: every
+       build of the analytics stage records the fingerprint;
+    3. the graph DID change (or the hyperparameters did) → the analytics
+       stage rebuilds over the edge list derived for tier 2, under a
+       fingerprint seeded with that edge list's fingerprint. Content then
+       equals a from-scratch ``analytics_table`` over the folded triples.
+
+    Clears the staleness marker on success."""
     from ..operators.graph import cooccurrence_edges
     from ..plans.manifest import (
         StageRunner,
@@ -466,20 +420,10 @@ def refresh_analytics(
     )
     from ..plans.pipeline import run_analytics_stages
 
-    if scope not in ("auto", "full"):
-        raise ValueError(f"scope must be 'auto' or 'full', got {scope!r}")
     if not io.exists("triples"):
         return {"refreshed": False, "reason": "no triples table"}
-    stage_names = (
-        "analytics_pr",
-        "analytics_tri",
-        "analytics_comm",
-        "analytics_core",
-        "analytics",
-    )
-    before = {
-        s: getattr(io, "current_version", lambda _t: None)(s) for s in stage_names
-    }
+    current_version = getattr(io, "current_version", lambda _t: None)
+    before = current_version("analytics")
 
     def _clear_marker() -> None:
         clear_analytics_stale(io.warehouse)
@@ -496,12 +440,12 @@ def refresh_analytics(
             mf.extra.get("pagerank_iterations") == pagerank_iterations
             and mf.extra.get("buckets") == buckets
         )
-    # freshness tier 1 (zero Spark jobs): the fold manifest records which
-    # triples SNAPSHOT VERSION it derived from; if the pointer still names
-    # that version, nothing has merged since the build — the tables are
+    # freshness tier 1 (zero Spark jobs): the analytics manifest records
+    # which triples SNAPSHOT VERSION it derived from; if the pointer still
+    # names that version, nothing has merged since the build — the table is
     # exactly fresh without touching the data. This is the path a
     # scheduled refresh takes when no tail arrived.
-    cur_triples_v = getattr(io, "current_version", lambda _t: None)("triples")
+    cur_triples_v = current_version("triples")
     if (
         fold_mf is not None
         and cur_triples_v is not None
@@ -522,9 +466,9 @@ def refresh_analytics(
     # freshness tier 2 (one edge scan): the triples table DID move, but a
     # content-neutral merge (same co-occurrence pairs) leaves the edge-set
     # fingerprint equal — the proof works ACROSS seed schemes, since every
-    # build of the analytics group (batch config-seeded OR refresh
-    # edge-seeded) records the fingerprint in the fold manifest. The
-    # manifest is refreshed in place so the next refresh takes tier 1.
+    # build of the analytics stage (batch config-seeded OR refresh
+    # edge-seeded) records the fingerprint in its manifest. The manifest is
+    # refreshed in place so the next refresh takes tier 1.
     if (
         fold_mf is not None
         and fold_mf.extra.get("edges_fp") == efp
@@ -532,8 +476,6 @@ def refresh_analytics(
         and io.exists("analytics")
     ):
         fold_mf.extra["triples_snapshot"] = cur_triples_v
-        fold_mf.extra["pagerank_iterations"] = pagerank_iterations
-        fold_mf.extra["buckets"] = buckets
         write_manifest(io.path("analytics"), fold_mf)
         _clear_marker()
         return {
@@ -543,136 +485,6 @@ def refresh_analytics(
             "rows": fold_mf.rows,
         }
     runner = StageRunner(io)
-    from ..operators.components import connected_components
-    from ..operators.graph import (
-        k_core_numbers,
-        label_propagation,
-        triangle_counts,
-    )
-
-    membership = None
-    new_compfp = None
-    component_builds = None
-    scoped_stats: dict = {}
-    old_efp = fold_mf.extra.get("edges_fp") if fold_mf is not None else None
-    compfp_mf = load_manifest(io.path(ANALYTICS_COMPFP))
-    # the scoped diff is trusted ONLY when the stored per-component
-    # fingerprints are manifest-bound to the edge fingerprint the current
-    # tables were built from — anything weaker could reuse rows that
-    # don't belong to the graph the proof claims. Param drift does NOT
-    # block scoping: buckets is layout-only (the merged rows are
-    # rewritten under the new spec) and pagerank_iterations never touches
-    # tri/comm/core (their fingerprints exclude it, so they skip).
-    recorded_cfps = (
-        fold_mf.extra.get("component_fps", {}) if fold_mf is not None else {}
-    )
-
-    def _component_intact(stage: str) -> bool:
-        # the table whose rows the scoped path would REUSE must still carry
-        # the exact manifest the fold's proof was minted over — a crashed
-        # partial rebuild in between (e.g. a batch run that replaced
-        # analytics_tri with another graph's content, then died before the
-        # fold) breaks this and forces the full path (review finding)
-        mf = load_manifest(io.path(stage))
-        return (
-            mf is not None
-            and io.exists(stage)
-            and recorded_cfps.get(stage) == mf.fingerprint
-        )
-
-    can_scope = (
-        scope == "auto"
-        and old_efp is not None
-        and compfp_mf is not None
-        and compfp_mf.fingerprint == fingerprint("compfp", old_efp)
-        and io.exists(ANALYTICS_COMPFP)
-        and all(
-            _component_intact(s)
-            for s in ("analytics_tri", "analytics_comm", "analytics_core")
-        )
-    )
-    if can_scope and old_efp == efp:
-        # params-only tier 3 (e.g. a buckets change on an UNCHANGED
-        # graph): the per-component diff is all-unchanged by construction,
-        # so the CC job + fingerprint aggregation would be pure waste
-        # (review finding). Components whose fingerprints changed (layout
-        # knobs) rewrite straight from their own prior rows; components
-        # whose fingerprints did not change skip inside the runner and
-        # these builds never run.
-        def _rewrite(table: str):
-            return lambda: io.read(table)
-
-        component_builds = {
-            "tri": _rewrite("analytics_tri"),
-            "comm": _rewrite("analytics_comm"),
-            "core": _rewrite("analytics_core"),
-        }
-        scoped_stats = {"scoped": True, "sub_edges": 0}
-    elif can_scope:
-        membership = connected_components(edges).localCheckpoint(eager=True)
-        new_compfp = component_fingerprints(edges, membership).localCheckpoint(
-            eager=True
-        )
-        unchanged = (
-            new_compfp.join(
-                io.read(ANALYTICS_COMPFP),
-                ["rep", "n_edges", "h_xor", "h_sum"],
-                "left_semi",
-            )
-            .select("rep")
-            .localCheckpoint(eager=True)
-        )
-        n_components = new_compfp.count()
-        n_unchanged = unchanged.count()
-        if n_unchanged > 0:
-            keep_nodes = (
-                membership.join(
-                    unchanged.select(F.col("rep").alias("component")),
-                    "component",
-                    "left_semi",
-                )
-                .select(F.col("node").alias("src"))
-                .localCheckpoint(eager=True)
-            )
-            # both endpoints of an edge share a component, so anti-join on
-            # src alone removes exactly the unchanged components' edges
-            sub_edges = edges.join(keep_nodes, "src", "left_anti").localCheckpoint(
-                eager=True
-            )
-
-            def _merged(table: str, op):
-                def build() -> DataFrame:
-                    # io.read here — BEFORE the stage write — resolves the
-                    # OLD snapshot; TableIO snapshot isolation keeps those
-                    # files readable across the one overwrite this build
-                    # performs
-                    reused = io.read(table).join(keep_nodes, "src", "left_semi")
-                    return op(sub_edges).unionByName(reused)
-
-                return build
-
-            from ..plans.pipeline import ANALYTICS_LP_ITERATIONS
-
-            component_builds = {
-                "tri": _merged("analytics_tri", triangle_counts),
-                "comm": _merged(
-                    "analytics_comm",
-                    # iterations passed EXPLICITLY from the shared constant:
-                    # the recompute leg must match what the fingerprint (and
-                    # the reused rows) were built with (review finding)
-                    lambda e: label_propagation(
-                        e, iterations=ANALYTICS_LP_ITERATIONS
-                    ),
-                ),
-                "core": _merged("analytics_core", k_core_numbers),
-            }
-            scoped_stats = {
-                "scoped": True,
-                "components_total": n_components,
-                "components_unchanged": n_unchanged,
-                "sub_edges": sub_edges.count(),
-                "edges_total": edges.count(),
-            }
     run_analytics_stages(
         runner,
         triples,
@@ -680,78 +492,36 @@ def refresh_analytics(
         pagerank_iterations=pagerank_iterations,
         buckets=buckets,
         edges=edges,
-        edges_fp=efp,
-        seeded_by_graph=True,
-        # pinned BEFORE the builds: stamping the live pointer at fold time
+        # pinned BEFORE the build: stamping the live pointer at write time
         # would certify content derived from an older snapshot against a
         # concurrent merge's version (review finding)
         triples_snapshot=cur_triples_v,
-        component_builds=component_builds,
-    )
-    # mint/refresh the per-component fingerprint table for the NEW graph so
-    # the NEXT refresh can take the scoped path. The build is LAZY: the
-    # runner checks the manifest first, so when this graph's table already
-    # exists (params-only rebuilds, repeated refreshes) the CC job inside
-    # never runs (review finding).
-    def _build_compfp() -> DataFrame:
-        if new_compfp is not None:
-            return new_compfp
-        m = membership if membership is not None else connected_components(edges)
-        return component_fingerprints(edges, m)
-
-    runner.run(
-        ANALYTICS_COMPFP,
-        fingerprint("compfp", efp),
-        _build_compfp,
-        lineage_key="rep",
     )
     _clear_marker()
-    rebuilt = [
-        s
-        for s in stage_names
-        if getattr(io, "current_version", lambda _t: None)(s) != before[s]
-    ]
+    rebuilt = [] if current_version("analytics") == before else ["analytics"]
     if not rebuilt:
-        # tier-3 all-skip: every stage matched its graph-seeded manifest,
-        # which proves the tables derive from THIS edge fingerprint — but
-        # runner.run leaves extras untouched on skip, so a manifest
-        # missing triples_snapshot/params (pre-upgrade refresh build)
-        # would force the full edge derivation on every future refresh.
-        # Backfill the proof once so the next refresh takes tier 1
-        # (review finding).
-        mf = load_manifest(io.path("analytics"))
-        if mf is not None:
-            mf.extra.update(
-                {
-                    "edges_fp": efp,
-                    "triples_snapshot": cur_triples_v,
-                    "pagerank_iterations": pagerank_iterations,
-                    "buckets": buckets,
-                    # the skip itself verified each component manifest
-                    # matches the graph-seeded fingerprints, so recording
-                    # the on-disk values is sound and lets the NEXT
-                    # refresh's reuse-intactness check pass
-                    "component_fps": {
-                        s: load_manifest(io.path(s)).fingerprint
-                        for s in (
-                            "analytics_pr",
-                            "analytics_tri",
-                            "analytics_comm",
-                            "analytics_core",
-                        )
-                    },
-                }
-            )
-            write_manifest(io.path("analytics"), mf)
-    out = {
+        # tier-3 skip: the stage matched its graph-seeded manifest, which
+        # proves the table derives from THIS edge fingerprint — but
+        # runner.run leaves extras untouched on skip, so a manifest missing
+        # triples_snapshot/params would force the full edge derivation on
+        # every future refresh. Backfill the proof once so the next refresh
+        # takes tier 1 (review finding).
+        mf = runner.metrics["analytics"]
+        mf.extra.update(
+            {
+                "edges_fp": efp,
+                "triples_snapshot": cur_triples_v,
+                "pagerank_iterations": pagerank_iterations,
+                "buckets": buckets,
+            }
+        )
+        write_manifest(io.path("analytics"), mf)
+    return {
         "refreshed": True,
         "edges_fp": efp,
         "rebuilt": rebuilt,
         "rows": runner.metrics["analytics"].rows,
-        "scoped": False,
     }
-    out.update(scoped_stats)
-    return out
 
 
 def streaming_mentions(

@@ -396,3 +396,69 @@ class TestKCore:
         assert degeneracy >= 8
         n_nodes = len(naive)
         assert graph._LAST_PEEL_ROUNDS <= n_nodes + degeneracy + 1
+
+
+class TestIdTypes:
+    """The driver paths keep the input's id type, as the distributed paths
+    do: on a bigint edge list both give the same rows and column types,
+    also on an empty graph."""
+
+    UND = [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (10, 11)]
+
+    @staticmethod
+    def _ops():
+        from runne_contrastive_ner_spark.operators.graph import (
+            k_core_numbers,
+            label_propagation,
+            pagerank,
+            triangle_counts,
+        )
+
+        return (pagerank, triangle_counts, label_propagation, k_core_numbers)
+
+    def _check(self, nbrs):
+        for op in self._ops():
+            local = op(nbrs)
+            dist = op(nbrs, small_graph_edges=0)
+            assert local.dtypes == dist.dtypes, op.__name__
+            assert local.dtypes[0] == ("src", "bigint"), op.__name__
+            assert sorted(local.collect()) == sorted(dist.collect()), op.__name__
+
+    def test_bigint_ids(self, spark):
+        from pyspark.sql import functions as F
+
+        df = spark.createDataFrame(self.UND, "src bigint, dst bigint")
+        self._check(
+            df.unionByName(
+                df.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+            )
+        )
+
+    def test_empty_bigint_graph(self, spark):
+        self._check(spark.createDataFrame([], "src bigint, dst bigint"))
+
+
+class TestEdgesFingerprint:
+    """``edges_fingerprint_of`` over collected per-edge hashes equals the
+    Spark aggregation ``edges_fingerprint``: the analytics build records
+    one, the refresh compares it with the other."""
+
+    def test_driver_equals_spark(self, spark):
+        from pyspark.sql import functions as F
+
+        from runne_contrastive_ner_spark.streaming.incremental import (
+            edges_fingerprint,
+            edges_fingerprint_of,
+        )
+
+        for edges in (
+            _sym(spark, [("a", "b"), ("b", "c"), ("c", "a"), ("d", "e")]),
+            spark.range(0, 3000).select(
+                F.col("id").alias("src"), (F.col("id") * 7 % 101).alias("dst")
+            ),
+            spark.createDataFrame([], "src bigint, dst bigint"),
+        ):
+            hashes = [
+                r[0] for r in edges.select(F.xxhash64("src", "dst")).collect()
+            ]
+            assert edges_fingerprint_of(hashes) == edges_fingerprint(edges)

@@ -368,10 +368,7 @@ class TestAnalyticsRefresh:
         incremental_kg_fold(spark, io, batch1, batch1)
         assert analytics_stale_reason(wh) is None  # no analytics yet
         s1 = refresh_analytics(spark, io)
-        assert s1["refreshed"] and set(s1["rebuilt"]) == {
-            "analytics_pr", "analytics_tri", "analytics_comm",
-            "analytics_core", "analytics",
-        }
+        assert s1["refreshed"] and s1["rebuilt"] == ["analytics"]
 
         # tail that CHANGES the graph: a new co-occurring pair
         batch2 = self._mentions(spark, [("c3", 0, "aa"), ("c3", 0, "dd")])
@@ -497,17 +494,11 @@ class TestAnalyticsRefresh:
         assert s2["refreshed"] and s2["rebuilt"] == []
         assert s2["rows"] == s1["rows"]
 
-    def test_partial_batch_rebuild_mints_no_freshness_proof(
-        self, spark, tmp_path
-    ):
-        """Review finding: a batch run whose config fingerprints let some
-        component tables SKIP must not record a freshness proof — only a
-        run where every component provably derives from the current graph
-        may. Re-running with a changed pagerank_iterations rebuilds only
-        pagerank + fold; the new fold manifest must carry NO edges_fp /
-        triples_snapshot, and a pre-existing staleness marker must
-        survive the run (conservative: refresh_analytics is the path that
-        re-proves freshness)."""
+    def test_batch_rebuild_records_freshness_proof(self, spark, tmp_path):
+        """Every build of the analytics stage records the freshness proof
+        (edges_fp, triples_snapshot and the hyperparameters) and so clears
+        a staleness marker. A skip after an out-of-band triples merge keeps
+        the old extras and leaves the marker for refresh_analytics."""
         from runne_contrastive_ner_spark.plans.manifest import load_manifest
         from runne_contrastive_ner_spark.plans.pipeline import (
             PipelineConfig,
@@ -526,112 +517,33 @@ class TestAnalyticsRefresh:
             spark, t, PipelineConfig(warehouse=wh, analytics=True), input_fp="p1"
         )
         io = TableIO(spark, wh)
-        mf1 = load_manifest(io.path("analytics"))
-        assert "edges_fp" in mf1.extra  # full build records the proof
+        assert "edges_fp" in load_manifest(io.path("analytics")).extra
 
+        mark_analytics_stale(wh, reason="stray marker")
+        cfg5 = PipelineConfig(warehouse=wh, analytics=True, pagerank_iterations=5)
+        run_pipeline(spark, t, cfg5, input_fp="p1")
+        mf = load_manifest(io.path("analytics"))
+        assert mf.extra["edges_fp"]
+        assert mf.extra["triples_snapshot"] == io.current_version("triples")
+        assert mf.extra["pagerank_iterations"] == 5
+        assert analytics_stale_reason(wh) is None  # the rebuild proves freshness
+
+        # an out-of-band merge moves triples to a new snapshot; the batch
+        # fingerprints still match, so the analytics stage skips
+        io.write(io.read("triples"), "triples", partition_cols=["conv_bucket"])
         mark_analytics_stale(wh, reason="simulated out-of-band merge")
-        run_pipeline(
-            spark,
-            t,
-            PipelineConfig(warehouse=wh, analytics=True, pagerank_iterations=5),
-            input_fp="p1",
-        )
-        mf2 = load_manifest(io.path("analytics"))
-        assert "edges_fp" not in mf2.extra
-        assert "triples_snapshot" not in mf2.extra
+        run_pipeline(spark, t, cfg5, input_fp="p1")
+        assert load_manifest(io.path("analytics")).extra == mf.extra
         assert analytics_stale_reason(wh) is not None  # marker survives
 
-
-class TestScopedAnalyticsRefresh:
-    """VERDICT r7 item 3: when a tail touches one connected component, the
-    refresh must not recompute triangles/communities/core for the whole
-    graph. The scoped path diffs per-component fingerprints against the
-    analytics_compfp table minted by the previous graph-seeded build,
-    reuses unchanged components' rows, and recomputes the three operators
-    only over the changed components' edges — content must equal the full
-    operator over the whole graph, and the returned stats must prove the
-    reuse actually happened (the job-scope assertion)."""
-
-    MENTION_SCHEMA = TestIncrementalFold.MENTION_SCHEMA
-
-    def _mentions(self, spark, rows):
-        return TestIncrementalFold._mentions(self, spark, rows)
-
-    def test_scoped_refresh_equals_scratch_and_reuses_components(
-        self, spark, tmp_path
-    ):
-        from runne_contrastive_ner_spark.plans.pipeline import analytics_table
-        from runne_contrastive_ner_spark.sources.tables import TableIO
-        from runne_contrastive_ner_spark.streaming.incremental import (
-            incremental_kg_fold,
-            refresh_analytics,
-        )
-
-        wh = str(tmp_path / "swh")
-        io = TableIO(spark, wh)
-        # three DISJOINT components: {aa,bb} {cc,dd} {ee,ff}
-        batch1 = self._mentions(
-            spark,
-            [("c1", 0, "aa"), ("c1", 0, "bb"),
-             ("c2", 0, "cc"), ("c2", 0, "dd"),
-             ("c3", 0, "ee"), ("c3", 0, "ff")],
-        )
-        incremental_kg_fold(spark, io, batch1, batch1)
-        s1 = refresh_analytics(spark, io)
-        assert s1["rebuilt"] and not s1["scoped"]  # no diff base yet
-        assert io.exists("analytics_compfp")  # minted for the next refresh
-
-        # tail that grows ONLY the {ee,ff} component (ee co-occurs with gg)
-        batch2 = self._mentions(spark, [("c4", 0, "ee"), ("c4", 0, "gg")])
-        all2 = batch1.unionByName(batch2)
-        incremental_kg_fold(spark, io, all2, batch2)
-        s2 = refresh_analytics(spark, io)
-        assert s2["scoped"], s2
-        assert s2["components_total"] == 3
-        assert s2["components_unchanged"] == 2
-        # the three scoped operators ran over the changed component's edges
-        # only — strictly fewer than the whole graph's
-        assert 0 < s2["sub_edges"] < s2["edges_total"]
-        # content ≡ full recompute over the folded triples
-        scratch = analytics_table(io.read("triples"))
-        assert sorted(map(tuple, io.read("analytics").collect())) == sorted(
-            map(tuple, scratch.collect())
-        )
-        # reused rows really are the unchanged components': tri/comm/core
-        # carry the same values for aa..dd as scratch (checked above) AND
-        # the compfp table now describes the new graph
-        s3 = refresh_analytics(spark, io)
-        assert s3["rebuilt"] == []  # tier 1 — proofs advanced correctly
-
-    def test_scope_full_forces_unscoped_rebuild(self, spark, tmp_path):
-        from runne_contrastive_ner_spark.sources.tables import TableIO
-        from runne_contrastive_ner_spark.streaming.incremental import (
-            incremental_kg_fold,
-            refresh_analytics,
-        )
-        import pytest as _pytest
-
-        wh = str(tmp_path / "fwh")
-        io = TableIO(spark, wh)
-        batch1 = self._mentions(
-            spark, [("c1", 0, "aa"), ("c1", 0, "bb"), ("c2", 0, "cc"), ("c2", 0, "dd")]
-        )
-        incremental_kg_fold(spark, io, batch1, batch1)
-        refresh_analytics(spark, io)
-        batch2 = self._mentions(spark, [("c3", 0, "cc"), ("c3", 0, "hh")])
-        all2 = batch1.unionByName(batch2)
-        incremental_kg_fold(spark, io, all2, batch2)
-        s = refresh_analytics(spark, io, scope="full")
-        assert not s["scoped"] and "analytics_tri" in s["rebuilt"]
-        with _pytest.raises(ValueError, match="scope"):
-            refresh_analytics(spark, io, scope="bogus")
-
-    def test_bucket_change_rebuilds_component_tables(self, spark, tmp_path):
-        """ADVICE r7 item 1: `buckets` joins every component stage
+    def test_bucket_change_rebuilds_analytics_layout(self, spark, tmp_path):
+        """ADVICE r7 item 1: `buckets` joins the analytics stage
         fingerprint — changing the bucket count on an UNCHANGED graph must
-        rebuild the physically-bucketed component tables with the new
-        layout instead of skipping while the manifest stamps the new
-        value."""
+        rebuild the physically-bucketed table with the new layout instead
+        of skipping while the manifest stamps the new value."""
+        import json
+        import os
+
         from runne_contrastive_ner_spark.plans.manifest import load_manifest
         from runne_contrastive_ner_spark.sources.tables import TableIO
         from runne_contrastive_ner_spark.streaming.incremental import (
@@ -646,30 +558,60 @@ class TestScopedAnalyticsRefresh:
         )
         incremental_kg_fold(spark, io, batch, batch)
         s1 = refresh_analytics(spark, io, buckets=16)
-        assert s1["rebuilt"]
-        # params-only tier 3 must NOT pay the connected-components job:
-        # the graph is unchanged, so the per-component diff is
-        # all-unchanged by construction (r8 review finding) — assert by
-        # making CC explode
-        import runne_contrastive_ner_spark.operators.components as comp_mod
-
-        real_cc = comp_mod.connected_components
-
-        def _boom(*_a, **_k):
-            raise AssertionError("params-only rebuild must not run CC")
-
-        comp_mod.connected_components = _boom
-        try:
-            s2 = refresh_analytics(spark, io, buckets=8)
-        finally:
-            comp_mod.connected_components = real_cc
-        assert {"analytics_tri", "analytics_comm", "analytics_core",
-                "analytics"} <= set(s2["rebuilt"]), s2
-        mf = load_manifest(io.path("analytics"))
-        assert mf.extra["buckets"] == 8
+        assert s1["rebuilt"] == ["analytics"]
+        s2 = refresh_analytics(spark, io, buckets=8)
+        assert s2["rebuilt"] == ["analytics"], s2
+        assert load_manifest(io.path("analytics")).extra["buckets"] == 8
+        with open(os.path.join(io.data_path("analytics"), "_bucketspec.json")) as f:
+            assert json.load(f)["n"] == 8
         # and a same-bucket refresh right after is tier-1 quiet again
         s3 = refresh_analytics(spark, io, buckets=8)
         assert s3["rebuilt"] == []
+
+    def test_refresh_without_cooccurrence_edges(self, spark, tmp_path):
+        """A triples table with no co_occurs_with rows has an empty
+        co-occurrence graph: the analytics table is empty, with the same
+        column types as the distributed operators give, and the refresh
+        reports 0 rows."""
+        from runne_contrastive_ner_spark.operators.graph import (
+            cooccurrence_edges,
+            k_core_numbers,
+            label_propagation,
+            pagerank,
+            triangle_counts,
+        )
+        from runne_contrastive_ner_spark.plans.pipeline import (
+            analytics_table,
+            fold_analytics,
+        )
+        from runne_contrastive_ner_spark.sources.tables import TableIO
+        from runne_contrastive_ner_spark.streaming.incremental import (
+            refresh_analytics,
+        )
+
+        wh = str(tmp_path / "ewh")
+        io = TableIO(spark, wh)
+        io.write(
+            spark.createDataFrame(
+                [("c1", 1, "follows", 2, 0)],
+                "conv_id string, subj bigint, pred string, obj bigint, "
+                "src_turn_idx int",
+            ),
+            "triples",
+        )
+        s = refresh_analytics(spark, io)
+        assert s["refreshed"] and s["rows"] == 0
+        edges = cooccurrence_edges(io.read("triples"))
+        want = fold_analytics(
+            pagerank(edges, small_graph_edges=0),
+            triangle_counts(edges, small_graph_edges=0),
+            label_propagation(edges, small_graph_edges=0),
+            k_core_numbers(edges, small_graph_edges=0),
+        )
+        built = analytics_table(io.read("triples"))
+        assert built.count() == 0
+        assert built.dtypes == want.dtypes == io.read("analytics").dtypes
+        assert dict(built.dtypes)["entity_id"] == "bigint"
 
     def test_corrupt_stale_marker_degrades_not_raises(self, spark, tmp_path):
         """ADVICE r7 item 3: a torn/corrupt marker file still MEANS stale
@@ -691,51 +633,3 @@ class TestScopedAnalyticsRefresh:
         with open(os.path.join(wh, "_analytics_stale.json"), "w") as f:
             f.write('{"reason": "torn')  # simulated torn write
         assert analytics_stale_reason(wh) == "unknown"
-
-    def test_tampered_component_blocks_scoped_reuse(self, spark, tmp_path):
-        """Reuse-intactness guard (r8 review finding): the scoped path must
-        refuse to reuse a component table whose manifest no longer matches
-        the fingerprint the fold's proof was minted over — the state a
-        crashed partial rebuild leaves behind. Content must still converge
-        to scratch via the full path."""
-        from runne_contrastive_ner_spark.plans.manifest import (
-            load_manifest,
-            write_manifest,
-        )
-        from runne_contrastive_ner_spark.plans.pipeline import analytics_table
-        from runne_contrastive_ner_spark.sources.tables import TableIO
-        from runne_contrastive_ner_spark.streaming.incremental import (
-            incremental_kg_fold,
-            refresh_analytics,
-        )
-
-        wh = str(tmp_path / "twh2")
-        io = TableIO(spark, wh)
-        batch1 = self._mentions(
-            spark,
-            [("c1", 0, "aa"), ("c1", 0, "bb"),
-             ("c2", 0, "cc"), ("c2", 0, "dd")],
-        )
-        incremental_kg_fold(spark, io, batch1, batch1)
-        refresh_analytics(spark, io)  # full build, mints compfp + proof
-        # simulate the crashed foreign rebuild: analytics_tri's manifest no
-        # longer matches what the fold folded
-        mf = load_manifest(io.path("analytics_tri"))
-        mf.fingerprint = "tampered-by-crashed-rebuild"
-        write_manifest(io.path("analytics_tri"), mf)
-        # graph-changing tail touching only component {cc,dd}
-        batch2 = self._mentions(spark, [("c3", 0, "cc"), ("c3", 0, "zz")])
-        all2 = batch1.unionByName(batch2)
-        incremental_kg_fold(spark, io, all2, batch2)
-        s = refresh_analytics(spark, io)
-        assert not s["scoped"], s  # reuse refused, full path taken
-        scratch = analytics_table(io.read("triples"))
-        assert sorted(map(tuple, io.read("analytics").collect())) == sorted(
-            map(tuple, scratch.collect())
-        )
-        # proof re-minted: the NEXT graph-changing refresh can scope again
-        batch3 = self._mentions(spark, [("c4", 0, "cc"), ("c4", 0, "yy")])
-        all3 = all2.unionByName(batch3)
-        incremental_kg_fold(spark, io, all3, batch3)
-        s2 = refresh_analytics(spark, io)
-        assert s2["scoped"] and s2["components_unchanged"] >= 1, s2

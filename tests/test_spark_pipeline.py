@@ -386,9 +386,21 @@ class TestPipeline:
         assert res2.triples.count() == res.triples.count()
 
     def test_analytics_stage(self, spark, transcripts, tmp_path):
-        """Optional 5th stage: PageRank centrality materialized over the
-        normalized triple table, with its own manifest (resume skips it;
-        the stage appears only when enabled)."""
+        """Optional 5th stage: per-entity PageRank, triangles, community
+        and core number over the normalized triple table, with its own
+        manifest (resume skips it; the stage appears only when enabled)."""
+        from runne_contrastive_ner_spark.operators.graph import (
+            cooccurrence_edges,
+            k_core_numbers,
+            label_propagation,
+            pagerank,
+            triangle_counts,
+        )
+        from runne_contrastive_ner_spark.plans.pipeline import (
+            ANALYTICS_LP_ITERATIONS,
+            fold_analytics,
+        )
+
         cfg = PipelineConfig(warehouse=str(tmp_path / "wha"), analytics=True)
         res = run_pipeline(spark, transcripts, cfg, input_fp="a")
         assert res.analytics is not None
@@ -417,28 +429,33 @@ class TestPipeline:
         # community labels are node ids of the same graph
         labels = {r.community for r in rows}
         assert labels <= {r.entity_id for r in rows}
+        # the stage builds its table on the driver from one collected edge
+        # list; rows and column types equal the fold of the four operators
+        # forced onto their distributed paths over the stored triples
+        edges = cooccurrence_edges(res.triples)
+        want = fold_analytics(
+            pagerank(edges, small_graph_edges=0),
+            triangle_counts(edges, small_graph_edges=0),
+            label_propagation(edges, ANALYTICS_LP_ITERATIONS, small_graph_edges=0),
+            k_core_numbers(edges, small_graph_edges=0),
+        )
+        assert res.analytics.dtypes == want.dtypes
+        assert dict(res.analytics.dtypes)["entity_id"] == dict(res.triples.dtypes)["subj"]
+        assert sorted(map(tuple, rows)) == sorted(map(tuple, want.collect()))
         res2 = run_pipeline(spark, transcripts, cfg, input_fp="a")
         assert (
             res2.metrics["analytics"]["wall_sec"] == res.metrics["analytics"]["wall_sec"]
         )
-        # component-level resume (r7): changing pagerank_iterations must
-        # recompute ONLY the pagerank component + the fold — triangles,
-        # communities and core keep their manifests
+        # a pagerank_iterations change rebuilds the analytics stage only
         cfg_it = PipelineConfig(
             warehouse=str(tmp_path / "wha"), analytics=True, pagerank_iterations=5
         )
         res3 = run_pipeline(spark, transcripts, cfg_it, input_fp="a")
-        for unchanged in ("analytics_tri", "analytics_comm", "analytics_core"):
-            assert (
-                res3.metrics[unchanged]["wall_sec"]
-                == res.metrics[unchanged]["wall_sec"]
-            ), unchanged
-        assert res3.metrics["analytics_pr"]["wall_sec"] != res.metrics[
-            "analytics_pr"
-        ]["wall_sec"]
-        assert res3.metrics["analytics"]["wall_sec"] != res.metrics["analytics"][
-            "wall_sec"
-        ]
+        for skipped in ("mentions", "entities", "edges", "triples"):
+            assert res3.metrics[skipped] == res.metrics[skipped], skipped
+        a1, a3 = res.metrics["analytics"], res3.metrics["analytics"]
+        assert a3["extra"]["snapshot"] != a1["extra"]["snapshot"]
+        assert a3["extra"]["pagerank_iterations"] == 5
         assert res3.analytics.count() == n_nodes
         # default config: no analytics stage, result field is None
         cfg_off = PipelineConfig(warehouse=str(tmp_path / "wha_off"))
