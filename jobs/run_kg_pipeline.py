@@ -37,8 +37,8 @@ def main() -> None:
     ap.add_argument(
         "--compact",
         action="store_true",
-        help="after the run, rewrite the bucketed stage tables to one file "
-        "per partition value (Iceberg rewrite_data_files equivalent); "
+        help="after the run, rewrite the triples table to one file per "
+        "conv_bucket partition (Iceberg rewrite_data_files equivalent); "
         "resume fingerprints are preserved",
     )
     ap.add_argument(
@@ -87,9 +87,10 @@ def main() -> None:
         from runne_contrastive_ner_spark.sources.tables import TableIO
 
         io = TableIO(spark, cfg.warehouse)
+        # mentions and entities are bucketed on surface_norm, so their
+        # file count is bounded at write; triples is the one partitioned table
         out["compacted"] = {
-            stage: compact_stage(io, stage, partition_col="conv_bucket").files
-            for stage in ("mentions", "triples")
+            "triples": compact_stage(io, "triples", partition_col="conv_bucket").files
         }
     if args.export_ntriples:
         from runne_contrastive_ner_spark.sources.rdf import kg_export, write_ntriples

@@ -24,8 +24,14 @@ before the stream ran. If a prior run crashed after the stream
 checkpoint committed batches but before the fold finished, those batch
 dirs are absent from the manifest, so the restart folds them — nothing
 is permanently skipped. A warehouse with entities/triples but no (or
-stale-subset) manifest refolds every batch: the fold is deterministic
-and the MERGE idempotent, so over-folding is safe; under-folding is not.
+stale-subset) manifest refolds every batch — a warehouse built by the
+batch pipeline among them. Over-folding is safe: the fold RECOUNTS the
+entity stats over all accumulated mentions instead of adding a batch's
+counts onto the stored ones, and the triple MERGE replaces whole
+conversations, so a batch folded twice leaves the tables as once.
+Under-folding is not safe. The fold writes ``entities`` and ``triples``
+with the batch pipeline's schema and layout, so either entry point can
+continue a warehouse the other built.
 """
 
 from __future__ import annotations

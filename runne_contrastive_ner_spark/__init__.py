@@ -8,8 +8,8 @@ Layout
 functions/   pure-Python + numpy kernels that run *inside* pandas UDFs
              (text normalization, sentenization, offset-exact tokenization,
              constrained greedy span decoding, span embeddings, pluggable scorer)
-sources/     scans & sinks: RuNNE JSONL, TableIO (Iceberg with Parquet fallback),
-             N-Triples export, the REST recognizer, deterministic transcript
+sources/     scans & sinks: RuNNE JSONL, TableIO (the snapshot-isolated
+             Parquet table store both entry points share), N-Triples export, the REST recognizer, deterministic transcript
              derivation and synthesis
 operators/   DataFrame-level operators: mention detection, entity linking,
              connected components, predicate induction, graph analytics,

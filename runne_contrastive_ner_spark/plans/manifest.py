@@ -7,7 +7,7 @@ skips any stage whose manifest fingerprint matches — that IS the resume
 mechanism demanded by the north rule (stage outputs are the checkpoints;
 partial stage outputs without a manifest are ignored and overwritten).
 
-Snapshot isolation: TableIO's Parquet fallback writes every overwrite into a
+Snapshot isolation: TableIO writes every overwrite into a
 fresh immutable snapshot directory behind an atomically-switched pointer
 (tables.py), mirroring Iceberg's semantics — a DataFrame handle read before a
 re-run keeps resolving its own snapshot's files across one overwrite, and
@@ -120,12 +120,10 @@ class StageRunner:
             rows=out.count(),
             partition_rows=partition_lineage(out, lineage_key),
             wall_sec=round(time.time() - t0, 3),
-            files=getattr(self.io, "file_stats", lambda _t: {})(stage),
+            files=self.io.file_stats(stage),
             extra={
                 # lineage: which snapshot this manifest describes
-                "snapshot": getattr(self.io, "current_version", lambda _t: None)(
-                    stage
-                ),
+                "snapshot": self.io.current_version(stage),
                 **(extra or {}),
             },
         )
@@ -143,8 +141,8 @@ def compact_stage(
     shuffle_parts: int | None = None,
 ) -> StageManifest:
     """Small-file compaction for a written stage — the Iceberg
-    ``rewrite_data_files`` / ``OPTIMIZE`` equivalent for the Parquet
-    fallback. A 1000-executor writer legitimately produces
+    ``rewrite_data_files`` / ``OPTIMIZE`` equivalent for TableIO's
+    snapshot store. A 1000-executor writer legitimately produces
     tasks×buckets files; readers want few large files. This rewrites the
     table with one file per partition value (repartition BY the partition
     column routes each value to exactly one task) and refreshes the
@@ -164,10 +162,7 @@ def compact_stage(
         # recomputation rewrites the manifest and clears the flag) is a
         # no-op, not a second full-table rewrite
         return mf
-    spec_probe = getattr(io, "data_path", None)
-    if spec_probe is not None and os.path.exists(
-        os.path.join(io.data_path(stage), "_bucketspec.json")
-    ):
+    if os.path.exists(os.path.join(io.data_path(stage), "_bucketspec.json")):
         # a bucketed snapshot already has exactly n_buckets files AND carries
         # co-location metadata a plain rewrite would destroy — leave it
         return mf
@@ -181,14 +176,12 @@ def compact_stage(
         io.write(df, stage)
     # the predecessor snapshot holds the same rows in worse files — expire
     # it so compaction actually reclaims the disk it promises to
-    expire = getattr(io, "expire_snapshots", None)
-    if expire is not None:
-        expire(stage, keep=1)
+    io.expire_snapshots(stage, keep=1)
     mf.files = io.file_stats(stage)
     mf.extra = {
         **mf.extra,
         "compacted": True,
-        "snapshot": getattr(io, "current_version", lambda _t: None)(stage),
+        "snapshot": io.current_version(stage),
     }
     write_manifest(io.path(stage), mf)
     return mf

@@ -25,7 +25,7 @@ from ..functions.vocab import ENTITY_TYPES, TEST_ALIASES, TEST_GAZETTEER
 from ..operators.linking import canonicalize
 from ..operators.mentions import extract_mentions
 from ..operators.predicates import induce_predicates
-from ..sources.tables import TableIO
+from ..sources.tables import CONV_BUCKETS, TableIO, with_conv_bucket
 from .manifest import StageRunner, fingerprint
 
 
@@ -49,20 +49,14 @@ class PipelineConfig:
     embedding_threshold: float | None = None
     bigram_candidates: str = "auto"
     salt_partitions: int | None = None
-    # mention/triple tables are written partitioned by this many conversation
-    # hash buckets: per-conversation reads prune to one directory, and a
-    # 1000-executor writer produces bounded file counts per bucket (the
-    # Iceberg deployment maps this to bucket(conv_id, N) partition transform)
-    lineage_buckets: int = 16
-    # mentions + entities are hash-clustered on surface_norm at write time
-    # (TableIO bucket_spec), so the post-resume entity/triple folds join the
-    # re-read tables with ZERO surface_norm Exchange — the shuffle is paid
-    # once at write instead of on every re-run (VERDICT r4 item 2). The
-    # Parquet fallback can't combine bucketBy with partitionBy dirs in one
-    # catalog table cleanly, so the bucketed mentions table keeps conv_bucket
-    # as a plain COLUMN (still filterable; Iceberg gets both transforms
-    # natively). bucket_link_tables=False restores the conv_bucket-dir layout.
-    bucket_link_tables: bool = True
+    # mentions + entities are hash-clustered into this many buckets on
+    # surface_norm at write time (TableIO bucket_spec), so the post-resume
+    # entity/triple folds join the re-read tables with ZERO surface_norm
+    # Exchange — the shuffle is paid once at write instead of on every
+    # re-run (VERDICT r4 item 2). bucketBy and partitionBy dirs do not
+    # combine in one catalog table, so mentions keeps conv_bucket as a plain
+    # COLUMN; triples is partitioned by it (sources.tables.CONV_BUCKETS
+    # conversation buckets, the same layout the tail fold merges into).
     link_buckets: int = 16
     # optional 5th stage: per-entity graph analytics (PageRank, triangles,
     # community, core number) over the triple table, with its own manifest
@@ -234,8 +228,24 @@ def link_fingerprint(cfg: PipelineConfig, base_fp: str) -> str:
                 cfg.bigram_candidates,
             )
         )
-    link_args.append(cfg.bucket_link_tables and cfg.link_buckets)
+    link_args.append(cfg.link_buckets)
     return fingerprint(*link_args)
+
+
+def stage_fingerprints(cfg: PipelineConfig, input_fp: str) -> dict[str, str]:
+    """Resume fingerprints of the ``mentions`` stage, the ``link`` stages
+    (``entities`` and ``edges``) and the ``triples`` stage. The argument
+    lists still carry the two bucket counts, so a default-layout warehouse
+    built before those counts became constants resumes without a rebuild."""
+    base_fp = fingerprint(input_fp, sorted(cfg.gazetteer.items()), cfg.entity_types)
+    link_fp = link_fingerprint(cfg, base_fp)
+    return {
+        "mentions": fingerprint(
+            "mentions", base_fp, cfg.salt_partitions, CONV_BUCKETS, cfg.link_buckets
+        ),
+        "link": link_fp,
+        "triples": fingerprint("triples", link_fp, cfg.window_k, CONV_BUCKETS),
+    }
 
 
 def run_pipeline(
@@ -243,19 +253,8 @@ def run_pipeline(
 ) -> PipelineResult:
     io = TableIO(spark, cfg.warehouse)
     runner = StageRunner(io)
-
-    base_fp = fingerprint(input_fp, sorted(cfg.gazetteer.items()), cfg.entity_types)
-
-    def bucketed(df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            "conv_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(cfg.lineage_buckets))
-        )
-
-    link_spec = (
-        {"cols": ["surface_norm"], "n": cfg.link_buckets}
-        if cfg.bucket_link_tables
-        else None
-    )
+    fps = stage_fingerprints(cfg, input_fp)
+    link_spec = {"cols": ["surface_norm"], "n": cfg.link_buckets}
     # NOTE: the scorer is not a fingerprint component because run_pipeline
     # pins the GazetteerScorer (extract_mentions' default). If a
     # scorer_factory / model path is ever added to PipelineConfig, its
@@ -264,14 +263,8 @@ def run_pipeline(
     # serve stale mentions under a matching fingerprint.
     mentions = runner.run(
         "mentions",
-        fingerprint(
-            "mentions",
-            base_fp,
-            cfg.salt_partitions,
-            cfg.lineage_buckets,
-            cfg.bucket_link_tables and cfg.link_buckets,
-        ),
-        lambda: bucketed(
+        fps["mentions"],
+        lambda: with_conv_bucket(
             extract_mentions(
                 transcripts,
                 gazetteer=cfg.gazetteer,
@@ -279,12 +272,11 @@ def run_pipeline(
                 salt_partitions=cfg.salt_partitions,
             )
         ),
-        partition_cols=None if link_spec else ["conv_bucket"],
         lineage_key="conv_id",
         bucket_spec=link_spec,
     )
 
-    link_fp = link_fingerprint(cfg, base_fp)
+    link_fp = fps["link"]
     # linking + CC produce two tables from one computation; build once, stage twice
     state: dict[str, DataFrame] = {}
 
@@ -336,8 +328,8 @@ def run_pipeline(
 
     triples = runner.run(
         "triples",
-        fingerprint("triples", link_fp, cfg.window_k, cfg.lineage_buckets),
-        lambda: bucketed(build_triples()),
+        fps["triples"],
+        lambda: with_conv_bucket(build_triples()),
         partition_cols=["conv_bucket"],
         lineage_key="conv_id",
     )
@@ -353,9 +345,7 @@ def run_pipeline(
             # pinned BEFORE the analytics builds: the triples stage just
             # ran (or skipped) in this process, so the pointer read here
             # names the snapshot the `triples` handle actually reads
-            triples_snapshot=getattr(io, "current_version", lambda _t: None)(
-                "triples"
-            ),
+            triples_snapshot=io.current_version("triples"),
         )
         # clear the staleness marker a previous incremental fold left
         # behind only when the analytics manifest proves freshness against
@@ -365,9 +355,7 @@ def run_pipeline(
         from ..streaming.incremental import clear_analytics_stale
 
         recorded = runner.metrics["analytics"].extra.get("triples_snapshot")
-        if recorded is not None and recorded == getattr(
-            io, "current_version", lambda _t: None
-        )("triples"):
+        if recorded is not None and recorded == io.current_version("triples"):
             clear_analytics_stale(cfg.warehouse)
 
     metrics = {s: vars(m) for s, m in runner.metrics.items()}

@@ -1,14 +1,18 @@
-"""TableIO — thin seam over Iceberg-or-Parquet table storage.
+"""TableIO — the warehouse's one table store: snapshot-isolated Parquet.
 
-The target deployment materializes mentions/entities/edges/triples as Iceberg
-tables (BASELINE.json north_rule). The sandbox lacks the Iceberg runtime jar,
-so TableIO probes for the catalog once and falls back to partitioned Parquet
-with an identical layout; all engine code goes through this seam and never
-branches on the backend itself (SURVEY.md §7.0).
+Every KG table (mentions, entities, edges, triples, analytics) is written
+and read through this seam, by the staged batch build and by the tail
+ingest alike, so both entry points see one layout:
 
-Scale notes: writes are partitioned by the bucketed conversation key so a
-1000-executor job writes many independent files; ``partition_cols`` defaults
-keep file counts bounded via AQE coalescing (session.py).
+* every write lands in a new immutable snapshot directory behind an
+  atomically switched pointer (Iceberg's observable semantics, on plain
+  Parquet);
+* ``bucket_spec`` hash-clusters a snapshot on a join key (``mentions`` and
+  ``entities`` on ``surface_norm`` in the batch build), so joins on the
+  re-read tables run without an Exchange;
+* ``triples`` is partitioned by ``conv_bucket`` (``with_conv_bucket``), a
+  pure function of ``conv_id``, which lets a MERGE keyed on ``conv_id``
+  rewrite only the buckets its updates touch.
 """
 
 from __future__ import annotations
@@ -18,43 +22,33 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# conversation buckets of the conv_id-keyed tables; one constant for the
+# batch build and the tail fold, so a fold's pruned MERGE lines up with the
+# partition directories the batch build wrote
+CONV_BUCKETS = 16
 
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        # py4j resolves packages lazily, so attribute access alone cannot
-        # detect a missing jar — force a real classload
-        spark._jvm.java.lang.Class.forName(  # type: ignore[attr-defined]
-            "org.apache.iceberg.spark.SparkCatalog"
-        )
-        return True
-    except Exception:
-        return False
+
+def with_conv_bucket(df: DataFrame) -> DataFrame:
+    """``df`` plus ``conv_bucket = pmod(xxhash64(conv_id), CONV_BUCKETS)``."""
+    return df.withColumn(
+        "conv_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(CONV_BUCKETS))
+    )
 
 
 class TableIO:
     def __init__(self, spark: SparkSession, warehouse: str):
         self.spark = spark
         self.warehouse = warehouse
-        self.use_iceberg = False
-        if iceberg_available(spark):  # pragma: no cover - not in sandbox
-            try:
-                spark.conf.set("spark.sql.catalog.local", "org.apache.iceberg.spark.SparkCatalog")
-                spark.conf.set("spark.sql.catalog.local.type", "hadoop")
-                spark.conf.set("spark.sql.catalog.local.warehouse", warehouse)
-                self.use_iceberg = True
-            except Exception:
-                self.use_iceberg = False
 
     def path(self, table: str) -> str:
         """Table ROOT (manifest home; snapshot dirs live beneath it)."""
         return os.path.join(self.warehouse, table)
 
-    # --- snapshot versioning (Parquet fallback) ------------------------------
-    # Iceberg gives snapshot isolation natively; the fallback reproduces the
-    # observable semantics: every write lands in a NEW immutable snapshot
-    # directory (v000000, v000001, ...) and readers are routed through an
-    # atomically-switched pointer file, so a DataFrame handle read before an
-    # overwrite keeps resolving its own snapshot's files. The previous
+    # --- snapshot versioning ------------------------------------------------
+    # Every write lands in a NEW immutable snapshot directory (v000000,
+    # v000001, ...) and readers are routed through an atomically-switched
+    # pointer file, so a DataFrame handle read before an overwrite keeps
+    # resolving its own snapshot's files. The previous
     # snapshot is retained (handles stay valid across ONE overwrite — the
     # pipeline's re-run pattern); older snapshots are garbage-collected.
 
@@ -86,44 +80,9 @@ class TableIO:
     def current_version(self, table: str) -> int | None:
         p = self._pointer_path(table)
         if not os.path.exists(p):
-            self._migrate_legacy_layout(table)
-            if not os.path.exists(p):
-                return None
+            return None
         with open(p) as f:
             return int(f.read().strip())
-
-    def _migrate_legacy_layout(self, table: str) -> None:
-        """A warehouse written before snapshot versioning has its parquet
-        data directly in the table root. Adopt it in place as snapshot v0
-        (move data entries into v000000, leave the manifest at the root)
-        so resume keeps working and no orphan files linger."""
-        root = self.path(table)
-        if not os.path.isdir(root):
-            return
-        # exclude only snapshot dirs (exact v%06d shape) — a legacy partition
-        # directory whose column name starts with 'v' (version=1, vendor=x)
-        # is DATA and must be adopted into the snapshot
-        entries = [
-            e
-            for e in os.listdir(root)
-            if not e.startswith("_manifest")
-            and not e.startswith("_current")
-            and e != "_writer.lock"
-            and not (e.startswith("v") and e[1:].isdigit())
-        ]
-        has_data = any(
-            e.endswith(".parquet") or e == "_SUCCESS" or "=" in e for e in entries
-        )
-        if not has_data:
-            return
-        target = os.path.join(root, "v000000")
-        os.makedirs(target, exist_ok=True)
-        for e in entries:
-            os.rename(os.path.join(root, e), os.path.join(target, e))
-        tmp = self._pointer_path(table) + ".tmp"
-        with open(tmp, "w") as f:
-            f.write("0")
-        os.replace(tmp, self._pointer_path(table))
 
     def expire_snapshots(self, table: str, keep: int = 1) -> None:
         """Drop retained predecessor snapshots beyond ``keep`` (Iceberg's
@@ -158,8 +117,7 @@ class TableIO:
     # snapshot on the join key at write time (one shuffle, paid once) so
     # every subsequent fold over the re-read table joins/aggregates on that
     # key with ZERO Exchange — the resume path otherwise re-pays those
-    # shuffles on every re-run (VERDICT r4 item 2). On Iceberg this maps to
-    # a bucket(cols, n) partition transform; the Parquet fallback writes
+    # shuffles on every re-run (VERDICT r4 item 2). The write goes
     # through saveAsTable into the snapshot dir and records the spec in
     # _bucketspec.json so a NEW session can re-register the external table
     # (CREATE TABLE ... CLUSTERED BY ... LOCATION) and recover co-location.
@@ -191,23 +149,16 @@ class TableIO:
             )
         return name
 
-    def write(self, df: DataFrame, table: str, partition_cols: list[str] | None = None, mode: str = "overwrite", bucket_spec: dict | None = None) -> None:
-        if self.use_iceberg:  # pragma: no cover
-            writer = df.writeTo(f"local.db.{table}")
-            if mode == "overwrite":
-                writer.createOrReplace()
-            else:
-                writer.append()
-            return
-        if mode != "overwrite":
-            # the snapshot fallback is overwrite-only by design: an append
-            # would have to rewrite the previous snapshot's files into the
-            # new one anyway — use merge() for upserts instead of silently
-            # degrading append to overwrite
-            raise ValueError(
-                f"snapshot fallback supports mode='overwrite' only (got {mode!r}); "
-                "use merge() for upserts"
-            )
+    def write(
+        self,
+        df: DataFrame,
+        table: str,
+        partition_cols: list[str] | None = None,
+        bucket_spec: dict | None = None,
+    ) -> None:
+        """Overwrite ``table`` with ``df`` as a new snapshot. There is no
+        append: an append would rewrite the previous snapshot's files into
+        the new one anyway, so upserts go through ``merge()``."""
         with self._writer_lock(table):
             self._write_locked(df, table, partition_cols, bucket_spec)
 
@@ -229,7 +180,7 @@ class TableIO:
         v = 0 if cur is None else cur + 1
         target = self.data_path(table, v)
         if bucket_spec is not None:
-            self._write_bucketed_snapshot(df, table, v, target, bucket_spec)
+            self._save_bucketed_snapshot(df, table, v, target, bucket_spec)
         else:
             writer = df.write.mode("overwrite")  # target is always fresh
             if partition_cols:
@@ -261,7 +212,7 @@ class TableIO:
                 except Exception:
                     pass
 
-    def _write_bucketed_snapshot(
+    def _save_bucketed_snapshot(
         self, df: DataFrame, table: str, version: int, target: str, spec: dict
     ) -> None:
         import json
@@ -303,9 +254,7 @@ class TableIO:
         counts per first-level partition directory. Small-file explosion is
         the classic 1000-executor failure mode — recording these per stage
         in the manifest makes it observable instead of discovered at read
-        time. (Iceberg backend exposes the same via its metadata tables.)"""
-        if self.use_iceberg:  # pragma: no cover
-            return {}
+        time."""
         root = self.data_path(table)  # current snapshot only
         n_files = 0
         n_bytes = 0
@@ -331,17 +280,6 @@ class TableIO:
         """Read the current snapshot, or time-travel to ``version`` if it is
         still retained (current + one predecessor; Iceberg's
         ``VERSION AS OF`` with a 2-snapshot retention policy)."""
-        if self.use_iceberg:  # pragma: no cover
-            if version is not None:
-                # fallback versions are sequential ints; Iceberg snapshot
-                # ids are random 64-bit values — the two are NOT
-                # interchangeable, so refuse rather than mis-resolve
-                raise ValueError(
-                    "time travel on the Iceberg backend uses native snapshot "
-                    "ids (spark.read.option('snapshot-id', ...)), not the "
-                    "fallback's sequential versions"
-                )
-            return self.spark.read.table(f"local.db.{table}")
         p = self.data_path(table, version)
         if version is not None and not os.path.isdir(p):
             raise FileNotFoundError(
@@ -366,7 +304,7 @@ class TableIO:
         updates touch; every unaffected partition's files are HARDLINKED from
         the previous snapshot into the new one (same inode — no data copy).
         This is the file-reuse semantics of Iceberg's merge-on-read manifest
-        rewrite, expressed on the Parquet fallback: write amplification drops
+        rewrite, expressed on the snapshot store: write amplification drops
         from O(table) to O(affected partitions).
 
         CORRECTNESS PRECONDITION (caller-asserted via prune_partitions=True):
@@ -478,20 +416,6 @@ class TableIO:
         reading snapshot v and writing v+1, or two concurrent merges can
         both read v and the second write silently drops the first's updates.
         """
-        if self.use_iceberg:  # pragma: no cover — iceberg CAS serializes
-            if not self.exists(table):
-                self.write(updates, table, partition_cols=partition_cols)
-                return
-            current = self.read(table)
-            kept = current.join(
-                updates.select(*key_cols).distinct(), key_cols, "left_anti"
-            )
-            self.write(
-                kept.unionByName(updates.select(*current.columns)),
-                table,
-                partition_cols=partition_cols,
-            )
-            return
         with self._writer_lock(table):
             if not self.exists(table):
                 self._write_locked(updates, table, partition_cols=partition_cols)
@@ -506,8 +430,8 @@ class TableIO:
             ):
                 return
             current = self.read(table)
-            # a bucketed table stays bucketed through MERGE (Iceberg's bucket
-            # transform is a table property; the fallback re-reads the spec)
+            # a bucketed table stays bucketed through MERGE (the spec is
+            # re-read from the current snapshot)
             spec = None
             spec_path = os.path.join(self.data_path(table), "_bucketspec.json")
             if os.path.exists(spec_path):
@@ -530,8 +454,6 @@ class TableIO:
             )
 
     def exists(self, table: str) -> bool:
-        if self.use_iceberg:  # pragma: no cover
-            return self.spark.catalog.tableExists(f"local.db.{table}")
         if self.current_version(table) is None:
             return False
         p = self.data_path(table)
@@ -539,48 +461,3 @@ class TableIO:
             os.path.isdir(p) and any(f.endswith(".parquet") for f in os.listdir(p))
         )
 
-
-# --- bucketed tables (co-located joins) --------------------------------------
-# Big-fact x big-fact joins shuffle both sides on the key EVERY time they
-# run. Bucketing pre-shuffles ONCE at write: each side is hash-clustered
-# into n_buckets files on the join key + registered in the session catalog,
-# and a join between two tables bucketed the same way runs with ZERO
-# Exchange (asserted in tests/test_spark_pipeline.py). At 100 TB this turns
-# a recurring multi-TB shuffle into a one-time write cost — the standard
-# technique for the entity-dictionary x mentions and triples x triples
-# self-joins a KG workload repeats.
-#
-# Catalog caveat, stated honestly: bucketing METADATA lives in the catalog.
-# On a production cluster that is a persistent metastore (or Iceberg, whose
-# bucket transforms TableIO would use natively); this sandbox has the
-# in-memory catalog, so registration is per-application and re-attach
-# re-registers over the same files.
-
-
-def write_bucketed(
-    df: DataFrame,
-    name: str,
-    path: str,
-    bucket_cols: list[str],
-    n_buckets: int,
-    sort_cols: list[str] | None = None,
-) -> None:
-    """Write ``df`` hash-bucketed on ``bucket_cols`` as external table
-    ``name`` at ``path`` (overwrite). Joins between two tables written with
-    the same (cols, n_buckets) spec are exchange-free."""
-    spark = df.sparkSession
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    writer = (
-        df.write.mode("overwrite")
-        .option("path", path)
-        .bucketBy(n_buckets, *bucket_cols)
-    )
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(name)
-
-
-def read_bucketed(spark: SparkSession, name: str) -> DataFrame:
-    """The bucketed table, WITH its bucket metadata (a plain parquet read of
-    the same files would lose the co-location guarantee)."""
-    return spark.table(name)

@@ -1,21 +1,19 @@
-"""Incremental / streaming execution.
+"""Incremental / streaming execution: the tail-ingest half of the KG build.
 
-The north rule's pipeline is *checkpointed batch* (stage tables are the
-checkpoints — plans/manifest.py). This module adds the two incremental
-shapes a production deployment layers on top:
+The staged batch build (plans/pipeline.py) checkpoints at stage tables.
+This module keeps those same tables current as new transcripts arrive:
 
-* ``incremental_mentions`` — bucket-wise resumable ingest: conversations are
-  hash-bucketed; each bucket is processed and appended independently with a
-  per-bucket ledger, so a killed job resumes at bucket granularity and
-  re-running is idempotent. This is the pattern for backfilling 10^12 turns:
-  bounded units of work, each with its own lineage row.
-* ``incremental_kg_fold`` / ``refresh_analytics`` — fold newly ingested
-  conversations into the stored KG tables (and refresh the analytics
-  tables) without rebuilding from scratch.
 * ``streaming_mentions`` — Structured Streaming ingest of a transcripts
   directory: file source → ``extract_mentions`` per micro-batch (the
   mention UDFs are stateless per row, so the operator works unchanged on a
   streaming DataFrame).
+* ``incremental_kg_fold`` — fold newly ingested conversations into the
+  ``entities`` and ``triples`` tables, written with the batch build's
+  schema and layout, so a warehouse built by either entry point can be
+  continued by the other.
+* ``refresh_analytics`` — bring the analytics table up to date with the
+  folded triples, skipping the rebuild when the co-occurrence graph did not
+  change.
 """
 
 from __future__ import annotations
@@ -29,124 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.mentions import extract_mentions
-
-
-def _ledger_path(warehouse: str) -> str:
-    return os.path.join(warehouse, "_bucket_ledger.json")
-
-
-def _load_ledger(warehouse: str, config_key: str | None = None) -> set[int]:
-    """Completed buckets — but only if the ledger was written for the SAME
-    bucketing configuration (n_buckets + input fingerprint); a config change
-    invalidates all progress, otherwise bucket membership silently shifts."""
-    p = _ledger_path(warehouse)
-    if not os.path.exists(p):
-        return set()
-    with open(p) as f:
-        data = json.load(f)
-    if isinstance(data, list):  # legacy shape, no config recorded
-        return set(data) if config_key is None else set()
-    if config_key is not None and data.get("config") != config_key:
-        return set()
-    return set(data.get("done", []))
-
-
-def _save_ledger(warehouse: str, done: set[int], config_key: str) -> None:
-    os.makedirs(warehouse, exist_ok=True)
-    with open(_ledger_path(warehouse), "w") as f:
-        json.dump({"config": config_key, "done": sorted(done)}, f)
-
-
-def input_fingerprint(transcripts: DataFrame) -> str:
-    """Order-independent content fingerprint of a transcripts DataFrame:
-    row count + bit_xor-agg of the full 64-bit xxhash64(conv_id, turn_idx,
-    text). Hashing the TEXT (not just the keys) means an input whose turn
-    texts changed but whose (conv_id, turn_idx) keys did not still
-    invalidates the ledger (ADVICE r2). One scan; callers that already know
-    a cheaper identity (Iceberg snapshot id, source path + mtime) can pass
-    that to ``incremental_mentions`` instead."""
-    row = transcripts.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.bit_xor(F.xxhash64("conv_id", "turn_idx", "text")).alias("h"),
-    ).collect()[0]
-    return f"n={row['n']};h={row['h']}"
-
-
-def incremental_mentions(
-    spark: SparkSession,
-    transcripts: DataFrame,
-    warehouse: str,
-    n_buckets: int = 8,
-    fail_after_bucket: int | None = None,
-    input_fp: str | None = None,
-) -> DataFrame:
-    """Process transcripts bucket-by-bucket (hash of conv_id), appending each
-    bucket's mentions and recording completion in a ledger. Re-running skips
-    completed buckets. ``fail_after_bucket`` injects a crash for resume
-    tests.
-
-    The ledger key includes an INPUT fingerprint (computed when not passed),
-    so progress recorded against different input data is invalidated rather
-    than silently mixing stale buckets with fresh ones (ADVICE r1)."""
-    out_path = os.path.join(warehouse, "mentions_incremental")
-    if input_fp is None:
-        input_fp = input_fingerprint(transcripts)
-    config_key = f"n_buckets={n_buckets};input={input_fp}"
-    done = _load_ledger(warehouse, config_key)
-    bucketed = transcripts.withColumn(
-        "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets))
-    )
-    for b in range(n_buckets):
-        if b in done:
-            continue
-        part = bucketed.filter(F.col("bucket") == b).drop("bucket")
-        # each bucket writes its own overwritten subdirectory: a crash
-        # between the write and the ledger update re-OVERWRITES the same
-        # bucket on resume instead of double-appending (idempotent unit)
-        extract_mentions(part).write.mode("overwrite").parquet(
-            os.path.join(out_path, f"bucket={b}")
-        )
-        done.add(b)
-        _save_ledger(warehouse, done, config_key)
-        if fail_after_bucket is not None and b >= fail_after_bucket:
-            raise RuntimeError(f"injected failure after bucket {b}")
-    return spark.read.parquet(os.path.join(out_path, "bucket=*"))
-
-
-def incremental_triples(
-    spark: SparkSession,
-    transcripts: DataFrame,
-    warehouse: str,
-    n_buckets: int = 8,
-    fail_after_bucket: int | None = None,
-    input_fp: str | None = None,
-) -> DataFrame:
-    """End-to-end incremental KG build: mention detection — the stage that
-    dominates cost by orders of magnitude at corpus scale — is
-    bucket-resumable via the ledger (idempotent per-bucket overwrite);
-    linking/CC and predicate induction then run over the ACCUMULATED
-    mentions table. Those global stages rebuild rather than merge: the
-    surface dictionary and alias graph are corpus-global, and rebuilding
-    them from the compact mentions table is the cheap part (one groupBy +
-    the alias CC), so incremental-merge machinery would add complexity
-    without moving the wall clock. A crash mid-scan resumes at the failed
-    bucket and produces triples identical to a from-scratch run."""
-    from ..operators.linking import canonicalize
-    from ..operators.predicates import induce_predicates
-
-    mentions = incremental_mentions(
-        spark,
-        transcripts,
-        warehouse,
-        n_buckets=n_buckets,
-        fail_after_bucket=fail_after_bucket,
-        input_fp=input_fp,
-    )
-    _entities, _edges, linked = canonicalize(spark, mentions)
-    return induce_predicates(linked, entity_col="entity_id")
-
-
-FOLD_TRIPLE_BUCKETS = 16
+from ..sources.tables import with_conv_bucket
 
 
 def incremental_kg_fold(
@@ -163,12 +44,16 @@ def incremental_kg_fold(
 
     Invariant: after the fold, the ``entities`` and ``triples`` tables are
     row-identical to a from-scratch batch fold over ``all_mentions``
-    (property-tested in tests/test_incremental.py). The decomposition:
+    (property-tested in tests/test_incremental.py), with the batch build's
+    schema (``types`` is ``array<string>``) and layout (``triples``
+    partitioned by ``conv_bucket``). ``all_mentions`` is every mention
+    folded so far plus ``new_mentions``. The decomposition:
 
-    1. entity stats merge — per-surface (n_mentions, types) from the NEW
-       mentions only, merged into the previous ``entities`` snapshot by
-       full-outer union+groupBy. Dictionary-sized, exact (counts add, type
-       sets union).
+    1. entity stats — per-surface (n_mentions, types) RECOUNTED over
+       ``all_mentions`` with the batch build's own expression
+       (``entity_nodes``), never added onto the previous snapshot. A replay
+       of a fold that crashed after its ``entities`` write, or a first tail
+       over a batch-built warehouse, therefore cannot count a batch twice.
     2. re-canonicalize the DICTIONARY — alias edges + connected components
        over the merged node stats (linking.canonicalize_nodes). The
        dictionary is orders of magnitude smaller than the corpus; this is
@@ -185,41 +70,29 @@ def incremental_kg_fold(
        (induce_predicates windows by conv_id), so only delta conversations
        re-derive; MERGE by conv_id replaces exactly their triple groups.
 
+    The triples MERGE lands before the ``entities`` write, so a fold that
+    crashes between the two is replayed against the previous canonical
+    ids and re-derives every conversation a moved id touched.
+
     The merge WRITE is delta-sized too: the triples table is partitioned by
-    ``conv_bucket = hash(conv_id) % 16`` and the MERGE runs partition-pruned
+    ``conv_bucket`` (``sources.tables.with_conv_bucket``, the batch build's
+    expression) and the MERGE runs partition-pruned
     (TableIO._merge_pruned) — only buckets holding delta conversations are
     rewritten, untouched buckets HARDLINK into the new snapshot (Iceberg's
-    manifest-reuse semantics on the Parquet fallback). Returns fold stats
+    manifest-reuse semantics on the snapshot store). Returns fold stats
     (delta sizes for observability)."""
     from ..operators.linking import canonicalize_nodes, entity_nodes
     from ..operators.predicates import induce_predicates
 
-    new_stats = entity_nodes(new_mentions)
     prev_exists = io.exists("entities")
-    if prev_exists:
-        prev = io.read("entities")
-        prev_nodes = prev.select(
-            "surface_norm",
-            "n_mentions",
-            F.split("types", ",").alias("types"),
-        )
-        prev_canon = prev.select(
+    prev_canon = (
+        io.read("entities").select(
             "surface_norm", F.col("canonical_id").alias("prev_canonical_id")
         )
-        combined = (
-            prev_nodes.unionByName(new_stats)
-            .groupBy("surface_norm")
-            .agg(
-                F.sum("n_mentions").alias("n_mentions"),
-                F.array_sort(
-                    F.array_distinct(F.flatten(F.collect_list("types")))
-                ).alias("types"),
-            )
-        )
-    else:
-        prev_canon = None
-        combined = new_stats
-    combined = combined.localCheckpoint(eager=True)  # referenced 3x below
+        if prev_exists
+        else None
+    )
+    combined = entity_nodes(all_mentions).localCheckpoint(eager=True)
     entities, _edges = canonicalize_nodes(spark, combined, aliases=aliases)
     entities = entities.localCheckpoint(eager=True)
     if prev_canon is not None:
@@ -247,7 +120,7 @@ def incremental_kg_fold(
     )
     # a provable no-op fold (re-delivered content that is already folded:
     # no new conversations AND no canonical-id movement) changes NEITHER
-    # table — the entity stats merged to their previous values and no
+    # table — the entity stats recount to their previous values and no
     # conversation's triples re-derive. Returning before the writes
     # avoids a full entities rewrite + an empty pruned-merge snapshot, and
     # keeps the triples version stable so the next analytics refresh takes
@@ -277,21 +150,20 @@ def incremental_kg_fold(
         how="left",
     )
     triples_delta = induce_predicates(linked_delta, k=k, entity_col="entity_id")
-    io.write(entities.withColumn("types", F.concat_ws(",", "types")), "entities")
     # conv_bucket is a pure function of the merge key, which licenses the
     # partition-PRUNED merge: only the buckets holding delta conversations
     # are rewritten; untouched buckets hardlink into the new snapshot (the
     # delta-sized WRITE to pair with the delta-sized compute above)
-    triples_delta = triples_delta.withColumn(
-        "conv_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(FOLD_TRIPLE_BUCKETS))
-    )
     io.merge(
         "triples",
-        triples_delta,
+        with_conv_bucket(triples_delta),
         key_cols=["conv_id"],
         partition_cols=["conv_bucket"],
         prune_partitions=True,
     )
+    # after the merge: until this write lands, a replay still sees the
+    # previous canonical ids and so re-derives the same delta conversations
+    io.write(entities, "entities")
     # the merged triples MAY have changed the co-occurrence graph, so any
     # materialized analytics table is suspect until refresh_analytics
     # re-establishes exact freshness (edge-set fingerprint comparison).
@@ -422,7 +294,7 @@ def refresh_analytics(
 
     if not io.exists("triples"):
         return {"refreshed": False, "reason": "no triples table"}
-    current_version = getattr(io, "current_version", lambda _t: None)
+    current_version = io.current_version
     before = current_version("analytics")
 
     def _clear_marker() -> None:

@@ -1,70 +1,124 @@
-"""Tests for incremental bucket ingest (resume-after-crash) and the
-Structured Streaming ingest path."""
+"""Tests for the tail ingest: the Structured Streaming mention scan, the
+incremental KG fold, crash replay, and continuing a warehouse across the
+batch and tail entry points."""
+
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
+from jobs.run_streaming_pipeline import run_streaming
 from runne_contrastive_ner_spark.operators.mentions import extract_mentions
+from runne_contrastive_ner_spark.plans.pipeline import PipelineConfig, run_pipeline
+from runne_contrastive_ner_spark.sources.tables import TableIO
 from runne_contrastive_ner_spark.sources.transcripts import synthesize
-from runne_contrastive_ner_spark.streaming.incremental import (
-    _load_ledger,
-    incremental_mentions,
-    streaming_mentions,
-)
+from runne_contrastive_ner_spark.streaming.incremental import streaming_mentions
 
 
-class TestIncremental:
-    def test_resume_after_injected_crash(self, spark, tmp_path):
-        t = synthesize(spark, n_convs=6, turns_per_conv=6, long_conv_turns=0).cache()
+def _late_file(spark, tdir):
+    """Append one more parquet file of new conversations ("late-" ids)
+    whose turns repeat the surfaces already in ``tdir``."""
+    synthesize(spark, n_convs=2, turns_per_conv=4).withColumn(
+        "conv_id", F.concat(F.lit("late-"), F.col("conv_id"))
+    ).write.mode("append").parquet(tdir)
+
+
+def _batch_build(spark, tdir, wh, input_fp):
+    """``run_pipeline`` over every file now in ``tdir``."""
+    spark.catalog.refreshByPath(tdir)
+    run_pipeline(
+        spark, spark.read.parquet(tdir), PipelineConfig(warehouse=wh), input_fp
+    )
+
+
+def _assert_equals_scratch(spark, wh, tdir, scratch_wh):
+    """``entities`` and ``triples`` of ``wh`` equal a scratch batch build
+    over every file in ``tdir``, column types included."""
+    _batch_build(spark, tdir, scratch_wh, "scratch")
+    got, want = TableIO(spark, wh), TableIO(spark, scratch_wh)
+
+    def ents(io, cols):
+        return Counter(
+            tuple(tuple(v) if isinstance(v, list) else v for v in r)
+            for r in io.read("entities").select(*cols).collect()
+        )
+
+    # counts first: they are what a double-folded batch gets wrong
+    cols = ["surface_norm", "canonical_id", "n_mentions"]
+    assert ents(got, cols) == ents(want, cols)
+    cols += ["types", "entity_id"]
+    assert ents(got, cols) == ents(want, cols)
+    tcols = want.read("triples").columns
+    assert Counter(map(tuple, got.read("triples").select(*tcols).collect())) == (
+        Counter(map(tuple, want.read("triples").collect()))
+    )
+    for table in ("entities", "triples"):
+        assert got.read(table).dtypes == want.read(table).dtypes, table
+
+
+def test_streaming_replay_after_crash_at_triples_merge(spark, tmp_path, monkeypatch):
+    """A tail run that crashes at its triples MERGE, after the stream
+    checkpoint took the new file and before the fold manifest was written,
+    is replayed by the next run. The replay must end with the tables of a
+    scratch build: the entity stats are recounted, so the replayed batch is
+    not counted twice."""
+    tdir = str(tmp_path / "transcripts")
+    wh = str(tmp_path / "wh")
+    synthesize(spark, n_convs=3, turns_per_conv=5).write.parquet(tdir)
+    run_streaming(spark, tdir, wh)
+    _late_file(spark, tdir)
+
+    merge = TableIO.merge
+    crashed = []
+
+    def merge_crashing_once(self, table, *a, **kw):
+        if table == "triples" and not crashed:
+            crashed.append(table)
+            raise RuntimeError("injected crash at the triples merge")
+        return merge(self, table, *a, **kw)
+
+    monkeypatch.setattr(TableIO, "merge", merge_crashing_once)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run_streaming(spark, tdir, wh)
+    out = run_streaming(spark, tdir, wh)
+    assert crashed and out["new_batches"] >= 1
+    _assert_equals_scratch(spark, wh, tdir, str(tmp_path / "scratch"))
+
+
+class TestCrossEntryPoint:
+    """A warehouse built by either entry point is continued by the other:
+    both write ``entities`` and ``triples`` with one schema and layout."""
+
+    @staticmethod
+    def _dtypes(spark, wh):
+        io = TableIO(spark, wh)
+        return io.read("entities").dtypes, io.read("triples").dtypes
+
+    def test_batch_then_tail(self, spark, tmp_path):
+        tdir = str(tmp_path / "transcripts")
         wh = str(tmp_path / "wh")
-        with pytest.raises(RuntimeError, match="injected failure"):
-            incremental_mentions(spark, t, wh, n_buckets=4, fail_after_bucket=1)
-        done_after_crash = _load_ledger(wh)
-        assert 0 < len(done_after_crash) < 4
-        # resume: completes the rest, total equals a one-shot run
-        out = incremental_mentions(spark, t, wh, n_buckets=4)
-        assert out.count() == extract_mentions(t).count()
-        # idempotent: running again appends nothing
-        again = incremental_mentions(spark, t, wh, n_buckets=4)
-        assert again.count() == out.count()
+        synthesize(spark, n_convs=3, turns_per_conv=5).write.parquet(tdir)
+        _batch_build(spark, tdir, wh, "b1")
+        batch_dtypes = self._dtypes(spark, wh)
+        _late_file(spark, tdir)
+        out = run_streaming(spark, tdir, wh)
+        assert out["new_batches"] >= 1
+        assert self._dtypes(spark, wh) == batch_dtypes
+        _assert_equals_scratch(spark, wh, tdir, str(tmp_path / "scratch"))
 
-    def test_incremental_triples_resume_matches_scratch(self, spark, tmp_path):
-        """End-to-end incremental KG build: crash mid-mention-scan, resume,
-        and the final triples equal a from-scratch (non-incremental) run."""
-        from runne_contrastive_ner_spark.operators.linking import canonicalize
-        from runne_contrastive_ner_spark.operators.predicates import (
-            induce_predicates,
-        )
-        from runne_contrastive_ner_spark.streaming.incremental import (
-            incremental_triples,
-        )
-
-        t = synthesize(spark, n_convs=6, turns_per_conv=6, long_conv_turns=0).cache()
-        wh = str(tmp_path / "wht")
-        with pytest.raises(RuntimeError, match="injected failure"):
-            incremental_triples(spark, t, wh, n_buckets=4, fail_after_bucket=1)
-        got = incremental_triples(spark, t, wh, n_buckets=4)
-        _, _, linked = canonicalize(spark, extract_mentions(t))
-        want = induce_predicates(linked, entity_col="entity_id")
-        key = ["conv_id", "subj", "pred", "obj", "src_turn_idx"]
-        assert sorted(map(tuple, got.select(*key).collect())) == sorted(
-            map(tuple, want.select(*key).collect())
-        )
-
-    def test_ledger_invalidated_when_input_changes(self, spark, tmp_path):
-        """Progress recorded against one input must NOT be reused for a
-        different input (ADVICE r1: stale-mixed-output bug)."""
-        t1 = synthesize(spark, n_convs=4, turns_per_conv=4, long_conv_turns=0).cache()
-        t2 = synthesize(spark, n_convs=6, turns_per_conv=5, long_conv_turns=0).cache()
-        wh = str(tmp_path / "wh2")
-        incremental_mentions(spark, t1, wh, n_buckets=4)
-        # re-running with DIFFERENT input recomputes every bucket: the output
-        # must equal a fresh full run over t2, not a stale mix
-        out = incremental_mentions(spark, t2, wh, n_buckets=4)
-        assert out.count() == extract_mentions(t2).count()
-        # and same-input rerun still short-circuits (ledger key stable)
-        again = incremental_mentions(spark, t2, wh, n_buckets=4)
-        assert again.count() == out.count()
+    def test_tail_then_batch_then_tail(self, spark, tmp_path):
+        tdir = str(tmp_path / "transcripts")
+        wh = str(tmp_path / "wh")
+        synthesize(spark, n_convs=3, turns_per_conv=5).write.parquet(tdir)
+        run_streaming(spark, tdir, wh)
+        tail_dtypes = self._dtypes(spark, wh)
+        _batch_build(spark, tdir, wh, "b1")
+        assert self._dtypes(spark, wh) == tail_dtypes
+        _late_file(spark, tdir)
+        out = run_streaming(spark, tdir, wh)
+        assert out["new_batches"] >= 1
+        assert self._dtypes(spark, wh) == tail_dtypes
+        _assert_equals_scratch(spark, wh, tdir, str(tmp_path / "scratch"))
 
 
 class TestStreaming:
@@ -112,17 +166,10 @@ def test_streaming_job_tail_ingest(spark, tmp_path):
     drain-what's-there (availableNow), restart picks up ONLY new files via
     the stream checkpoint, a no-new-files restart processes zero batches,
     and the folded triple set equals the batch pipeline over the union."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/jobs")
-    from run_streaming_pipeline import run_streaming
-
     from runne_contrastive_ner_spark.operators.linking import canonicalize
-    from runne_contrastive_ner_spark.operators.mentions import extract_mentions
     from runne_contrastive_ner_spark.operators.predicates import (
         induce_predicates,
     )
-    from runne_contrastive_ner_spark.sources.transcripts import synthesize
 
     tdir = str(tmp_path / "tail_transcripts")
     wh = str(tmp_path / "stream_wh")
@@ -158,19 +205,9 @@ def test_streaming_job_crash_between_checkpoint_and_fold(spark, tmp_path):
     committed new batches but BEFORE the fold ran, the restart must fold
     those batches — the skip decision keys on the persisted fold manifest,
     not on what the restarting process observed before its own stream."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/jobs")
-    from run_streaming_pipeline import run_streaming
-
     from runne_contrastive_ner_spark.operators.linking import canonicalize
-    from runne_contrastive_ner_spark.operators.mentions import extract_mentions
     from runne_contrastive_ner_spark.operators.predicates import (
         induce_predicates,
-    )
-    from runne_contrastive_ner_spark.sources.transcripts import synthesize
-    from runne_contrastive_ner_spark.streaming.incremental import (
-        streaming_mentions,
     )
 
     tdir = str(tmp_path / "crash_transcripts")
@@ -286,6 +323,60 @@ class TestIncrementalFold:
         ]
         assert bb_rows[0].canonical_id == "aa zz"
 
+    @pytest.mark.parametrize("crash_at", ["triples merge", "entities write"])
+    def test_fold_replay_after_crash_equals_scratch(
+        self, spark, tmp_path, monkeypatch, crash_at
+    ):
+        """A bridging fold that crashes at its triples MERGE, or after the
+        MERGE and at its entities write, is replayed with the same inputs.
+        The replay ends equal to a scratch fold: no surface counted twice,
+        and the untouched conversation c1, whose canonical id the bridge
+        moved, re-derived."""
+        from runne_contrastive_ner_spark.streaming.incremental import (
+            incremental_kg_fold,
+        )
+
+        aliases = [("aa zz", "bb")]
+        io = TableIO(spark, str(tmp_path / "crashwh"))
+        batch1 = self._mentions(
+            spark, [("c1", 0, "bb"), ("c1", 0, "qq"), ("c3", 0, "rr")]
+        )
+        incremental_kg_fold(spark, io, batch1, batch1, aliases=aliases)
+        batch2 = self._mentions(spark, [("c2", 0, "aa zz"), ("c2", 0, "bb")])
+        all2 = batch1.unionByName(batch2)
+
+        method, table = (
+            ("merge", "triples") if crash_at == "triples merge" else ("write", "entities")
+        )
+        real = getattr(TableIO, method)
+        crashed = []
+
+        def crash_once(self, *a, **kw):
+            name = a[0] if method == "merge" else a[1]
+            if name == table and not crashed:
+                crashed.append(name)
+                raise RuntimeError(f"injected crash at the {crash_at}")
+            return real(self, *a, **kw)
+
+        monkeypatch.setattr(TableIO, method, crash_once)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            incremental_kg_fold(spark, io, all2, batch2, aliases=aliases)
+        incremental_kg_fold(spark, io, all2, batch2, aliases=aliases)
+
+        want_entities, want_triples = self._scratch(spark, all2, aliases)
+        got = {
+            (r.surface_norm, r.canonical_id, r.n_mentions, tuple(r.types))
+            for r in io.read("entities").collect()
+        }
+        assert got == {
+            (r.surface_norm, r.canonical_id, r.n_mentions, tuple(r.types))
+            for r in want_entities.collect()
+        }
+        cols = io.read("triples").drop("conv_bucket").columns
+        assert Counter(map(tuple, io.read("triples").select(*cols).collect())) == (
+            Counter(map(tuple, want_triples.select(*cols).collect()))
+        )
+
     def test_multi_round_fold_equals_scratch(self, spark, tmp_path):
         """Three random-ish batch rounds; after every fold the tables equal
         the from-scratch fold over the accumulated mentions."""
@@ -323,11 +414,11 @@ class TestIncrementalFold:
                 tuple(r) for r in want_triples.select(*cols).collect()
             }, f"round {rnd} triples diverged"
             got = {
-                (r.surface_norm, r.canonical_id, r.n_mentions, r.types)
+                (r.surface_norm, r.canonical_id, r.n_mentions, tuple(r.types))
                 for r in io.read("entities").collect()
             }
             want = {
-                (r.surface_norm, r.canonical_id, r.n_mentions, ",".join(r.types))
+                (r.surface_norm, r.canonical_id, r.n_mentions, tuple(r.types))
                 for r in want_entities.collect()
             }
             assert got == want, f"round {rnd} entities diverged"

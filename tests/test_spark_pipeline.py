@@ -328,32 +328,30 @@ class TestPipeline:
 
     def test_manifest_records_file_stats(self, spark, transcripts, tmp_path):
         """File-count hygiene (VERDICT r2 item 8): every stage manifest
-        records output file counts/bytes, and the bucketed mention table's
-        files-per-bucket stays bounded by the writer-task count."""
+        records output file counts/bytes, the conv_bucket-partitioned
+        triple table's files-per-bucket stays bounded by the writer-task
+        count, and the bucketed mention table has one file per bucket."""
         import json
 
-        cfg = PipelineConfig(
-            warehouse=str(tmp_path / "whf"),
-            lineage_buckets=4,
-            bucket_link_tables=False,
-        )
+        from runne_contrastive_ner_spark.sources.tables import CONV_BUCKETS
+
+        cfg = PipelineConfig(warehouse=str(tmp_path / "whf"), link_buckets=4)
         run_pipeline(spark, transcripts, cfg, input_fp="f")
-        with open(str(tmp_path / "whf" / "mentions" / "_manifest.json")) as f:
+        with open(str(tmp_path / "whf" / "triples" / "_manifest.json")) as f:
             mf = json.load(f)
         stats = mf["files"]
         assert stats["n_files"] > 0 and stats["bytes"] > 0
         fpp = stats["files_per_partition"]
         assert fpp and all(k.startswith("conv_bucket=") for k in fpp)
+        assert len(fpp) <= CONV_BUCKETS
         # upper bound: one file per writer task per bucket (tests run with
         # 4 shuffle partitions)
         assert max(fpp.values()) <= 4
-        # the bucketed default layout bounds files harder: the pre-cluster
+        # the bucketed layout bounds files harder: the pre-cluster
         # repartition makes exactly link_buckets writer tasks
-        cfg_b = PipelineConfig(warehouse=str(tmp_path / "whfb"), link_buckets=4)
-        run_pipeline(spark, transcripts, cfg_b, input_fp="f")
-        with open(str(tmp_path / "whfb" / "mentions" / "_manifest.json")) as f:
-            mfb = json.load(f)
-        assert 0 < mfb["files"]["n_files"] <= 4
+        with open(str(tmp_path / "whf" / "mentions" / "_manifest.json")) as f:
+            mfm = json.load(f)
+        assert 0 < mfm["files"]["n_files"] <= 4
 
     def test_compact_stage_bounds_files_and_preserves_resume(
         self, spark, transcripts, tmp_path
@@ -363,27 +361,34 @@ class TestPipeline:
         from runne_contrastive_ner_spark.plans.manifest import compact_stage
         from runne_contrastive_ner_spark.sources.tables import TableIO
 
-        # the conv_bucket-dir layout: compaction targets partition dirs
-        # (bucketed snapshots are file-bounded by construction and skip it)
-        cfg = PipelineConfig(
-            warehouse=str(tmp_path / "whc"),
-            lineage_buckets=4,
-            bucket_link_tables=False,
-        )
+        # the conv_bucket-dir layout of triples: compaction targets
+        # partition dirs (bucketed snapshots are file-bounded by
+        # construction and skip it)
+        cfg = PipelineConfig(warehouse=str(tmp_path / "whc"))
         res = run_pipeline(spark, transcripts, cfg, input_fp="c")
-        n_before = res.mentions.count()
+        n_before = res.triples.count()
         io = TableIO(spark, cfg.warehouse)
-        before = io.file_stats("mentions")
-        mf = compact_stage(io, "mentions", partition_col="conv_bucket")
-        after = io.file_stats("mentions")
-        assert after["n_files"] <= 4  # one file per bucket value
+        before = io.file_stats("triples")
+        mf = compact_stage(io, "triples", partition_col="conv_bucket")
+        after = io.file_stats("triples")
+        # one file per bucket value
+        assert after["n_files"] == len(after["files_per_partition"])
         assert after["n_files"] < before["n_files"]
-        assert io.read("mentions").count() == n_before
+        assert io.read("triples").count() == n_before
         assert mf.extra.get("compacted") is True
         # resume: manifest fingerprint untouched -> every stage skips
         res2 = run_pipeline(spark, transcripts, cfg, input_fp="c")
-        assert res2.metrics["mentions"]["wall_sec"] == res.metrics["mentions"]["wall_sec"]
-        assert res2.triples.count() == res.triples.count()
+        assert res2.metrics["triples"]["wall_sec"] == res.metrics["triples"]["wall_sec"]
+        assert res2.triples.count() == n_before
+        # per-conversation pruning still works on the compacted layout
+        conv = res2.triples.select("conv_id", "conv_bucket").first()
+        one = res2.triples.filter(
+            (F.col("conv_bucket") == conv["conv_bucket"])
+            & (F.col("conv_id") == conv["conv_id"])
+        )
+        assert one.count() == res2.triples.filter(
+            F.col("conv_id") == conv["conv_id"]
+        ).count() > 0
 
     def test_analytics_stage(self, spark, transcripts, tmp_path):
         """Optional 5th stage: per-entity PageRank, triangles, community
@@ -480,7 +485,7 @@ class TestPipeline:
 
         from runne_contrastive_ner_spark.sources.tables import TableIO
 
-        cfg = PipelineConfig(warehouse=str(tmp_path / "whp"), lineage_buckets=8)
+        cfg = PipelineConfig(warehouse=str(tmp_path / "whp"))
         run_pipeline(spark, transcripts, cfg, input_fp="prune")
         io_ = TableIO(spark, cfg.warehouse)
         triples = io_.read("triples")
@@ -601,41 +606,6 @@ class TestSnapshotIsolation:
         with pytest.raises(FileNotFoundError):  # v0 expired (retention 2)
             io.read("t", version=0)
 
-    def test_legacy_flat_layout_migrates_in_place(self, spark, tmp_path):
-        """A warehouse written before snapshot versioning (parquet directly
-        in the table root) is adopted as snapshot v0 on first touch — resume
-        keeps working, no orphan files."""
-        import os
-
-        from runne_contrastive_ner_spark.sources.tables import TableIO
-
-        root = tmp_path / "whl" / "t"
-        spark.range(7).write.parquet(str(root))  # legacy layout
-        io = TableIO(spark, str(tmp_path / "whl"))
-        assert io.exists("t")
-        assert io.current_version("t") == 0
-        assert io.read("t").count() == 7
-        # data moved under v000000; no parquet left at the root
-        assert not any(f.endswith(".parquet") for f in os.listdir(str(root)))
-        io.write(spark.range(2), "t")  # overwrite continues the history
-        assert io.current_version("t") == 1
-        assert io.read("t").count() == 2
-
-    def test_legacy_v_prefixed_partition_dir_migrates(self, spark, tmp_path):
-        """A legacy layout partitioned on a column whose NAME starts with
-        'v' (version=...) must be adopted too — the snapshot-dir exclusion
-        matches the exact v%06d shape, not any 'v' prefix."""
-        from runne_contrastive_ner_spark.sources.tables import TableIO
-
-        root = tmp_path / "whv" / "t"
-        df = spark.range(6).selectExpr("id", "CAST(id % 2 AS INT) AS version")
-        df.write.partitionBy("version").parquet(str(root))
-        io = TableIO(spark, str(tmp_path / "whv"))
-        assert io.current_version("t") == 0
-        got = io.read("t")
-        assert got.count() == 6  # no partition silently dropped
-        assert set(got.columns) == {"id", "version"}
-
     def test_compaction_reclaims_and_is_idempotent(self, spark, transcripts, tmp_path):
         """Compaction expires the small-file predecessor snapshot (disk is
         actually reclaimed) and a second compact call is a no-op."""
@@ -644,23 +614,19 @@ class TestSnapshotIsolation:
         from runne_contrastive_ner_spark.plans.manifest import compact_stage
         from runne_contrastive_ner_spark.sources.tables import TableIO
 
-        cfg = PipelineConfig(
-            warehouse=str(tmp_path / "whci"),
-            lineage_buckets=4,
-            bucket_link_tables=False,
-        )
+        cfg = PipelineConfig(warehouse=str(tmp_path / "whci"))
         run_pipeline(spark, transcripts, cfg, input_fp="ci")
         io = TableIO(spark, cfg.warehouse)
-        compact_stage(io, "mentions", partition_col="conv_bucket")
+        compact_stage(io, "triples", partition_col="conv_bucket")
         snaps = [
             d
-            for d in os.listdir(io.path("mentions"))
+            for d in os.listdir(io.path("triples"))
             if d.startswith("v") and d[1:].isdigit()
         ]
         assert snaps == ["v000001"]  # predecessor expired, only compacted left
-        v_before = io.current_version("mentions")
-        mf2 = compact_stage(io, "mentions", partition_col="conv_bucket")
-        assert io.current_version("mentions") == v_before  # no rewrite
+        v_before = io.current_version("triples")
+        mf2 = compact_stage(io, "triples", partition_col="conv_bucket")
+        assert io.current_version("triples") == v_before  # no rewrite
         assert mf2.extra["snapshot"] == v_before  # lineage points at current
 
     def test_merge_upsert(self, spark, tmp_path):
@@ -778,17 +744,15 @@ class TestBucketedTables:
         """Two tables written with the same bucket spec join with ZERO
         Exchange (the pre-shuffled co-located join) and identical results
         to the shuffled join — the recurring-shuffle eliminator for the
-        mentions x entity-dictionary shape at corpus scale."""
+        mentions x entity-dictionary shape at corpus scale. Written through
+        TableIO's bucket_spec, the path the pipeline's stages take."""
         import contextlib
         import io
         import re
 
         from pyspark.sql import functions as F2
 
-        from runne_contrastive_ner_spark.sources.tables import (
-            read_bucketed,
-            write_bucketed,
-        )
+        from runne_contrastive_ner_spark.sources.tables import TableIO
 
         mentions = spark.range(4000).select(
             F2.concat(F2.lit("s"), (F2.col("id") % 111).cast("string")).alias(
@@ -804,19 +768,15 @@ class TestBucketedTables:
                 "canonical_id"
             ),
         )
-        write_bucketed(
-            mentions, "bkt_mentions", str(tmp_path / "bm"),
-            ["surface_norm"], 8, sort_cols=["surface_norm"],
-        )
-        write_bucketed(
-            ents, "bkt_entities", str(tmp_path / "be"),
-            ["surface_norm"], 8, sort_cols=["surface_norm"],
-        )
+        tio = TableIO(spark, str(tmp_path / "bkt"))
+        spec = {"cols": ["surface_norm"], "n": 8, "sort": ["surface_norm"]}
+        tio.write(mentions, "bkt_mentions", bucket_spec=spec)
+        tio.write(ents, "bkt_entities", bucket_spec=spec)
         old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
-            j = read_bucketed(spark, "bkt_mentions").join(
-                read_bucketed(spark, "bkt_entities"), "surface_norm"
+            j = tio.read("bkt_mentions").join(
+                tio.read("bkt_entities"), "surface_norm"
             )
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):
@@ -825,8 +785,6 @@ class TestBucketedTables:
             got = {(r.mention_id, r.canonical_id) for r in j.collect()}
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-            spark.sql("DROP TABLE IF EXISTS bkt_mentions")
-            spark.sql("DROP TABLE IF EXISTS bkt_entities")
         want = {
             (r.mention_id, r.canonical_id)
             for r in mentions.join(ents, "surface_norm").collect()
@@ -905,20 +863,6 @@ class TestBucketedPipelineStages:
         cfg, res = self._run(spark, transcripts.limit(0), tmp_path / "wh0")
         assert res.mentions.count() == 0
         assert res.triples.count() == 0
-
-    def test_unbucketed_layout_still_available(self, spark, transcripts, tmp_path):
-        import os
-
-        _, res = self._run(
-            spark, transcripts, tmp_path / "whu", bucket_link_tables=False
-        )
-        assert res.mentions.count() > 0
-        # legacy layout: conv_bucket partition dirs, no bucketspec
-        root = tmp_path / "whu" / "mentions"
-        snap = [d for d in os.listdir(root) if d.startswith("v")][0]
-        entries = os.listdir(root / snap)
-        assert any(e.startswith("conv_bucket=") for e in entries)
-        assert "_bucketspec.json" not in entries
 
 
 class TestPrunedMerge:
@@ -1502,11 +1446,15 @@ def test_link_fingerprint_stability_contract():
     """ADVICE r6: with the embedding leg OFF, the link fingerprint must be
     byte-identical to the pre-embedding 5-element shape — toggling the
     (unused) embedding knobs must not invalidate an existing non-embedding
-    warehouse. With the leg ON, the knobs do (and should) enter."""
+    warehouse. With the leg ON, the knobs do (and should) enter. The
+    default mentions, link and triples fingerprints are pinned to the
+    values of the releases that still had the bucket layout switches, so
+    their default warehouses resume without a rebuild."""
     from runne_contrastive_ner_spark.plans.manifest import fingerprint
     from runne_contrastive_ner_spark.plans.pipeline import (
         PipelineConfig,
         link_fingerprint,
+        stage_fingerprints,
     )
 
     off = PipelineConfig(warehouse="/tmp/x", use_embedding_edges=False)
@@ -1515,9 +1463,14 @@ def test_link_fingerprint_stability_contract():
         "base",
         sorted(off.aliases),
         False,
-        off.bucket_link_tables and off.link_buckets,
+        off.link_buckets,
     )
     assert link_fingerprint(off, "base") == legacy
+    assert stage_fingerprints(PipelineConfig(warehouse="/tmp/x"), "x") == {
+        "mentions": "b1c38fbe3f2949e",
+        "link": "c534721e77b1537",
+        "triples": "7f4d146895560ad",
+    }
     off_other_knobs = PipelineConfig(
         warehouse="/tmp/x",
         use_embedding_edges=False,
