@@ -56,33 +56,49 @@ def _assert_equals_scratch(spark, wh, tdir, scratch_wh):
         assert got.read(table).dtypes == want.read(table).dtypes, table
 
 
-def test_streaming_replay_after_crash_at_triples_merge(spark, tmp_path, monkeypatch):
-    """A tail run that crashes at its triples MERGE, after the stream
-    checkpoint took the new file and before the fold manifest was written,
-    is replayed by the next run. The replay must end with the tables of a
-    scratch build: the entity stats are recounted, so the replayed batch is
-    not counted twice."""
+def _streaming_replay_after_crash(spark, tmp_path, monkeypatch, method, table):
+    """Tail-ingest a late file with ``TableIO.<method>`` raising once for
+    ``table``, re-run ``run_streaming``, and compare with a scratch build."""
     tdir = str(tmp_path / "transcripts")
     wh = str(tmp_path / "wh")
     synthesize(spark, n_convs=3, turns_per_conv=5).write.parquet(tdir)
     run_streaming(spark, tdir, wh)
     _late_file(spark, tdir)
 
-    merge = TableIO.merge
+    real = getattr(TableIO, method)
     crashed = []
 
-    def merge_crashing_once(self, table, *a, **kw):
-        if table == "triples" and not crashed:
-            crashed.append(table)
-            raise RuntimeError("injected crash at the triples merge")
-        return merge(self, table, *a, **kw)
+    def crash_once(self, *a, **kw):
+        # merge(table, ...), write(df, table, ...)
+        name = a[0] if method == "merge" else a[1]
+        if name == table and not crashed:
+            crashed.append(name)
+            raise RuntimeError(f"injected crash at the {table} {method}")
+        return real(self, *a, **kw)
 
-    monkeypatch.setattr(TableIO, "merge", merge_crashing_once)
+    monkeypatch.setattr(TableIO, method, crash_once)
     with pytest.raises(RuntimeError, match="injected crash"):
         run_streaming(spark, tdir, wh)
     out = run_streaming(spark, tdir, wh)
     assert crashed and out["new_batches"] >= 1
     _assert_equals_scratch(spark, wh, tdir, str(tmp_path / "scratch"))
+
+
+def test_streaming_replay_after_crash_at_triples_merge(spark, tmp_path, monkeypatch):
+    """A tail run that crashes at its triples MERGE, after the stream
+    checkpoint took the new file and before the fold manifest was written,
+    is replayed by the next run. The replay must end with the tables of a
+    scratch build: the entity stats are recounted, so the replayed batch is
+    not counted twice."""
+    _streaming_replay_after_crash(spark, tmp_path, monkeypatch, "merge", "triples")
+
+
+def test_streaming_replay_after_crash_at_entities_write(spark, tmp_path, monkeypatch):
+    """A tail run that crashes at its entities write, after the triples
+    MERGE has landed, is replayed by the next run. The replay re-merges
+    triples that already hold the batch and must still end with the
+    tables of a scratch build."""
+    _streaming_replay_after_crash(spark, tmp_path, monkeypatch, "write", "entities")
 
 
 class TestCrossEntryPoint:

@@ -916,6 +916,32 @@ class TestPrunedMerge:
             set(after["bucket=1"].values()) & set(before["bucket=1"].values())
         )
 
+    def test_with_conv_bucket_is_a_function_of_conv_id(self, spark):
+        """The shared ``conv_bucket`` tag depends on ``conv_id`` alone: the
+        same id lands in one bucket whatever else the row holds and however
+        the frame is partitioned, so the batch build's partition dirs and a
+        tail fold's pruned MERGE agree. Buckets stay in [0, CONV_BUCKETS)."""
+        from runne_contrastive_ner_spark.sources.tables import (
+            CONV_BUCKETS,
+            with_conv_bucket,
+        )
+
+        ids = [f"conv-{i:04d}" for i in range(200)]
+        a = with_conv_bucket(
+            spark.createDataFrame([(c, 0) for c in ids], "conv_id string, x int")
+        )
+        b = with_conv_bucket(
+            spark.createDataFrame(
+                [(c, t) for c in reversed(ids) for t in range(3)],
+                "conv_id string, x int",
+            ).repartition(7)
+        )
+        got_a = {r.conv_id: r.conv_bucket for r in a.collect()}
+        pairs_b = {(r.conv_id, r.conv_bucket) for r in b.collect()}
+        assert pairs_b == set(got_a.items())
+        assert all(0 <= v < CONV_BUCKETS for v in got_a.values())
+        assert len(set(got_a.values())) > CONV_BUCKETS // 2
+
     def test_pruned_merge_equals_full_merge(self, spark, tmp_path):
         """Property: pruned and full merge produce identical tables over a
         random update sequence."""
