@@ -54,7 +54,15 @@ def run_streaming(
     pagerank_iterations: int = 3,
     analytics_buckets: int = 16,
 ) -> dict:
-    from runne_contrastive_ner_spark.sources.tables import TableIO
+    """Ingest the files of ``transcripts_dir`` the stream has not seen and
+    fold them into the ``entities`` and ``triples`` tables of ``warehouse``.
+
+    Returns the fold stats plus the stored rows of the stream mentions and
+    of both tables. Those counts are summed from Parquet footers on the
+    driver, so they run no Spark job. A call with nothing new to fold reads
+    no table: its only job is the stream's schema probe of
+    ``transcripts_dir``."""
+    from runne_contrastive_ner_spark.sources.tables import TableIO, footer_rows
     from runne_contrastive_ner_spark.streaming.incremental import (
         incremental_kg_fold,
         refresh_analytics,
@@ -95,11 +103,6 @@ def run_streaming(
         return {"mentions": 0, "entities": 0, "triples": 0,
                 "batches": 0, "new_batches": 0}
 
-    # the session caches leaf-file listings per path (InMemoryFileIndex):
-    # without the refresh, a second run in the same session folds only the
-    # batches that existed at first read and silently drops the new ones
-    spark.catalog.refreshByPath(mentions_dir)
-    mentions = spark.read.parquet(mentions_dir).drop("batch_id")
     io = TableIO(spark, warehouse)
     folded = folded_dirs()
     new_dirs = sorted(after - folded)
@@ -109,6 +112,12 @@ def run_streaming(
         fold_stats = {"delta_convs": 0, "changed_surfaces": 0,
                       "incremental": True}
     else:
+        # the session caches leaf-file listings per path (InMemoryFileIndex):
+        # without the refresh, a second run in the same session folds only
+        # the batches that existed at first read and silently drops the new
+        # ones
+        spark.catalog.refreshByPath(mentions_dir)
+        mentions = spark.read.parquet(mentions_dir).drop("batch_id")
         if folded and new_dirs and folded <= after:
             new_mentions = spark.read.parquet(
                 *[os.path.join(mentions_dir, d) for d in new_dirs]
@@ -123,9 +132,9 @@ def run_streaming(
         fold_stats = incremental_kg_fold(spark, io, mentions, new_mentions)
         write_manifest(after)  # only after the triples merge landed
     out = {
-        "mentions": mentions.count(),
-        "entities": io.read("entities").count(),
-        "triples": io.read("triples").count(),
+        "mentions": footer_rows(mentions_dir),
+        "entities": io.rows("entities"),
+        "triples": io.rows("triples"),
         "batches": len(after),
         "new_batches": len(new_dirs),
         **fold_stats,

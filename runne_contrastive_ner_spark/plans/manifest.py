@@ -33,6 +33,8 @@ MANIFEST_NAME = "_manifest.json"
 class StageManifest:
     stage: str
     fingerprint: str
+    # rows of the snapshot this manifest describes (``extra["snapshot"]``),
+    # summed from its Parquet footers by TableIO.rows, not counted by a job
     rows: int
     partition_rows: dict[str, int] = field(default_factory=dict)
     wall_sec: float = 0.0
@@ -102,10 +104,20 @@ class StageRunner:
         """``extra``: additional key/values recorded in the manifest when
         the stage BUILDS (ignored on skip — the existing manifest already
         carries its build-time values). May be a mutable dict the build
-        callable populates: it is read only after ``build()`` returns."""
+        callable populates: it is read only after ``build()`` returns.
+
+        A stage skips only when its manifest matches ``fp`` AND still
+        describes the table's current snapshot: a write that bypassed the
+        runner (a tail fold rewriting ``entities``/``triples``) leaves the
+        manifest naming an older snapshot, and the stage rebuilds."""
         path = self.io.path(stage)
         existing = load_manifest(path)
-        if existing is not None and existing.fingerprint == fp and self.io.exists(stage):
+        if (
+            existing is not None
+            and existing.fingerprint == fp
+            and self.io.exists(stage)
+            and existing.extra.get("snapshot") == self.io.current_version(stage)
+        ):
             if self.verbose:
                 print(f"[resume] stage {stage}: manifest matches, skipping")
             self.metrics[stage] = existing
@@ -117,7 +129,7 @@ class StageRunner:
         mf = StageManifest(
             stage=stage,
             fingerprint=fp,
-            rows=out.count(),
+            rows=self.io.rows(stage),
             partition_rows=partition_lineage(out, lineage_key),
             wall_sec=round(time.time() - t0, 3),
             files=self.io.file_stats(stage),

@@ -12,7 +12,10 @@ ingest alike, so both entry points see one layout:
   re-read tables run without an Exchange;
 * ``triples`` is partitioned by ``conv_bucket`` (``with_conv_bucket``), a
   pure function of ``conv_id``, which lets a MERGE keyed on ``conv_id``
-  rewrite only the buckets its updates touch.
+  rewrite only the buckets its updates touch;
+* a snapshot's row count is the sum of its Parquet footers (``rows``),
+  read on the driver without a Spark job, as Iceberg keeps a snapshot's
+  record count in its metadata.
 """
 
 from __future__ import annotations
@@ -26,6 +29,39 @@ from pyspark.sql import functions as F
 # batch build and the tail fold, so a fold's pruned MERGE lines up with the
 # partition directories the batch build wrote
 CONV_BUCKETS = 16
+
+
+def data_files(root: str) -> list[str]:
+    """The data files Spark's file index reads under ``root``: every file
+    below it, skipping any name (file or directory) that starts with ``.``,
+    or with ``_`` unless it is a ``_k=v`` partition directory. That drops
+    ``_SUCCESS``, ``_temporary``, ``_bucketspec.json`` and ``.crc``
+    checksums."""
+
+    def hidden(name: str) -> bool:
+        return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+    out = []
+    for dirpath, dirs, files in os.walk(root):
+        dirs[:] = [d for d in dirs if not hidden(d)]
+        out += [os.path.join(dirpath, f) for f in sorted(files) if not hidden(f)]
+    return out
+
+
+def footer_rows(root: str) -> int:
+    """Rows stored under ``root``: the sum of ``num_rows`` over the Parquet
+    footers of ``data_files(root)``, read with pyarrow on the driver."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(f).num_rows for f in data_files(root))
+
+
+def _one_file_per_partition(df: DataFrame, partition_cols: list[str] | None) -> DataFrame:
+    """``df`` hash-repartitioned by ``partition_cols``, so a partitioned
+    write of it emits one file per partition value."""
+    if not partition_cols:
+        return df
+    return df.repartition(*[F.col(c) for c in partition_cols])
 
 
 def with_conv_bucket(df: DataFrame) -> DataFrame:
@@ -186,7 +222,7 @@ class TableIO:
             if partition_cols:
                 writer = writer.partitionBy(*partition_cols)
             writer.parquet(target)
-        if (partition_cols or bucket_spec) and not self._has_data_files(target):
+        if (partition_cols or bucket_spec) and not data_files(target):
             # a partitionBy/bucketBy write of an EMPTY DataFrame emits
             # _SUCCESS but no data files, which breaks schema inference
             # on read-back; rewrite the empty snapshot unpartitioned (and
@@ -243,12 +279,6 @@ class TableIO:
                 f,
             )
 
-    def _has_data_files(self, data_dir: str) -> bool:
-        for _root, _dirs, files in os.walk(data_dir):
-            if any(f.endswith(".parquet") for f in files):
-                return True
-        return False
-
     def file_stats(self, table: str) -> dict:
         """Output-file hygiene: total parquet file count/bytes plus file
         counts per first-level partition directory. Small-file explosion is
@@ -256,25 +286,23 @@ class TableIO:
         in the manifest makes it observable instead of discovered at read
         time."""
         root = self.data_path(table)  # current snapshot only
-        n_files = 0
-        n_bytes = 0
+        files = data_files(root)
         per_part: dict[str, int] = {}
-        for dirpath, _dirs, files in os.walk(root):
-            pf = [f for f in files if f.endswith(".parquet")]
-            if not pf:
-                continue
-            n_files += len(pf)
-            for f in pf:
-                n_bytes += os.path.getsize(os.path.join(dirpath, f))
-            rel = os.path.relpath(dirpath, root)
+        for f in files:
+            rel = os.path.relpath(os.path.dirname(f), root)
             if rel != ".":
                 part = rel.split(os.sep)[0]
-                per_part[part] = per_part.get(part, 0) + len(pf)
+                per_part[part] = per_part.get(part, 0) + 1
         return {
-            "n_files": n_files,
-            "bytes": n_bytes,
+            "n_files": len(files),
+            "bytes": sum(os.path.getsize(f) for f in files),
             "files_per_partition": per_part,
         }
+
+    def rows(self, table: str) -> int:
+        """Row count of the current snapshot, from its Parquet footers: no
+        Spark job, and it equals ``read(table).count()``."""
+        return footer_rows(self.data_path(table))
 
     def read(self, table: str, version: int | None = None) -> DataFrame:
         """Read the current snapshot, or time-travel to ``version`` if it is
@@ -347,7 +375,12 @@ class TableIO:
             )
         else:
             kept = kept.limit(0)
-        rewritten = kept.unionByName(updates.select(*current.columns))
+        # one task per partition value, so each rewritten bucket is ONE
+        # file: written as it arrives, a bucket would gain a file per
+        # writer task on every merge
+        rewritten = _one_file_per_partition(
+            kept.unionByName(updates.select(*current.columns)), partition_cols
+        )
         root = self.path(table)
         cur_v = self.current_version(table)
         v = cur_v + 1
@@ -418,7 +451,11 @@ class TableIO:
         """
         with self._writer_lock(table):
             if not self.exists(table):
-                self._write_locked(updates, table, partition_cols=partition_cols)
+                self._write_locked(
+                    _one_file_per_partition(updates, partition_cols),
+                    table,
+                    partition_cols=partition_cols,
+                )
                 return
             if (
                 prune_partitions

@@ -149,14 +149,23 @@ def incremental_kg_fold(
         on="surface_norm",
         how="left",
     )
-    triples_delta = induce_predicates(linked_delta, k=k, entity_col="entity_id")
+    registry: list[DataFrame] = []
+    # checkpointed once: the merge's affected-bucket collect and its write
+    # would each re-run induce_predicates otherwise
+    triples_delta = with_conv_bucket(
+        induce_predicates(
+            linked_delta, k=k, entity_col="entity_id", persist_registry=registry
+        )
+    ).localCheckpoint(eager=True)
+    for df in registry:
+        df.unpersist()
     # conv_bucket is a pure function of the merge key, which licenses the
     # partition-PRUNED merge: only the buckets holding delta conversations
     # are rewritten; untouched buckets hardlink into the new snapshot (the
     # delta-sized WRITE to pair with the delta-sized compute above)
     io.merge(
         "triples",
-        with_conv_bucket(triples_delta),
+        triples_delta,
         key_cols=["conv_id"],
         partition_cols=["conv_bucket"],
         prune_partitions=True,

@@ -137,6 +137,52 @@ class TestCrossEntryPoint:
         _assert_equals_scratch(spark, wh, tdir, str(tmp_path / "scratch"))
 
 
+def test_noop_poll_runs_at_most_one_job(spark, tmp_path):
+    """A ``run_streaming`` call with nothing new reads no table: its result
+    counts come from Parquet footers, so the only job left in the caller's
+    job group is the stream's schema probe of the transcripts dir."""
+    tdir = str(tmp_path / "transcripts")
+    wh = str(tmp_path / "wh")
+    synthesize(spark, n_convs=3, turns_per_conv=5).write.parquet(tdir)
+    first = run_streaming(spark, tdir, wh)
+    sc = spark.sparkContext
+    sc.setJobGroup("noop-poll-probe", "run_streaming with nothing new")
+    try:
+        again = run_streaming(spark, tdir, wh)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert again["new_batches"] == 0
+    assert {k: again[k] for k in ("mentions", "entities", "triples")} == {
+        k: first[k] for k in ("mentions", "entities", "triples")
+    }
+    assert len(sc.statusTracker().getJobIdsForGroup("noop-poll-probe")) <= 1
+
+
+def test_batch_rerun_after_tail_rebuilds_the_folded_stages(spark, tmp_path):
+    """A tail fold rewrites ``entities`` and ``triples`` behind the batch
+    build's stage manifests. A later batch run over the original input,
+    with the same ``input_fp``, must rebuild those stages rather than skip
+    on a manifest that names an older snapshot: its tables equal a scratch
+    build over that input, and each manifest's rows match its table."""
+    a_dir = str(tmp_path / "a")
+    tail_dir = str(tmp_path / "a_and_b")
+    wh = str(tmp_path / "wh")
+    a = synthesize(spark, n_convs=3, turns_per_conv=5)
+    a.write.parquet(a_dir)
+    a.write.parquet(tail_dir)
+    _late_file(spark, tail_dir)
+    _batch_build(spark, a_dir, wh, "A")
+    run_streaming(spark, tail_dir, wh)
+    spark.catalog.refreshByPath(a_dir)
+    res = run_pipeline(
+        spark, spark.read.parquet(a_dir), PipelineConfig(warehouse=wh), "A"
+    )
+    _assert_equals_scratch(spark, wh, a_dir, str(tmp_path / "scratch"))
+    io = TableIO(spark, wh)
+    for stage in ("mentions", "entities", "edges", "triples"):
+        assert res.metrics[stage]["rows"] == io.rows(stage), stage
+
+
 class TestStreaming:
     def test_streaming_mentions_match_batch(self, spark, tmp_path):
         t = synthesize(spark, n_convs=4, turns_per_conv=6, long_conv_turns=0)

@@ -942,6 +942,44 @@ class TestPrunedMerge:
         assert all(0 <= v < CONV_BUCKETS for v in got_a.values())
         assert len(set(got_a.values())) > CONV_BUCKETS // 2
 
+    def test_merges_write_one_file_per_bucket(self, spark, tmp_path):
+        """A merge's first write and each pruned merge write every bucket
+        they touch as one file, however many tasks the rows come from. The
+        files of a bucket no longer grow by the writer-task count each
+        merge."""
+        import os
+
+        from runne_contrastive_ner_spark.sources.tables import TableIO
+
+        io_ = TableIO(spark, str(tmp_path / "pmf"))
+        schema = "key string, bucket int, val string"
+
+        def frame(keys, tag):
+            return spark.createDataFrame(
+                [(f"k{i}", i % 4, f"{tag}{i}") for i in keys], schema
+            ).repartition(3)
+
+        def files_per_bucket():
+            snap = io_.data_path("t")
+            return {
+                d: len([f for f in os.listdir(os.path.join(snap, d))
+                        if f.endswith(".parquet")])
+                for d in os.listdir(snap) if d.startswith("bucket=")
+            }
+
+        io_.merge("t", frame(range(40), "v"), key_cols=["key"],
+                  partition_cols=["bucket"], prune_partitions=True)
+        assert files_per_bucket() == {f"bucket={b}": 1 for b in range(4)}
+        want = {f"k{i}": f"v{i}" for i in range(40)}
+        for rnd, keys in enumerate([range(0, 40, 4), [1, 5, 9, 41, 45]]):
+            io_.merge("t", frame(keys, f"r{rnd}-"), key_cols=["key"],
+                      partition_cols=["bucket"], prune_partitions=True)
+            want.update({f"k{i}": f"r{rnd}-{i}" for i in keys})
+            counts = files_per_bucket()
+            rewritten = {f"bucket={i % 4}" for i in keys}
+            assert {d: counts[d] for d in rewritten} == dict.fromkeys(rewritten, 1)
+        assert {r.key: r.val for r in io_.read("t").collect()} == want
+
     def test_pruned_merge_equals_full_merge(self, spark, tmp_path):
         """Property: pruned and full merge produce identical tables over a
         random update sequence."""
@@ -968,6 +1006,50 @@ class TestPrunedMerge:
             a = {tuple(r) for r in io_a.read("t").collect()}
             b = {tuple(r) for r in io_b.read("t").collect()}
             assert a == b, f"round {rnd}"
+
+
+class TestFooterRows:
+    """``TableIO.rows`` sums the current snapshot's Parquet footers and
+    must equal ``read(table).count()`` on every layout the warehouse
+    writes, skipping the hidden files Spark's file index skips."""
+
+    def test_rows_equal_count_on_each_layout(self, spark, tmp_path):
+        from runne_contrastive_ner_spark.sources.tables import TableIO, with_conv_bucket
+
+        io_ = TableIO(spark, str(tmp_path / "fr"))
+        df = spark.createDataFrame(
+            [(f"c{i % 7}", f"s{i % 11}", i) for i in range(120)],
+            "conv_id string, surface_norm string, n long",
+        ).repartition(3)
+        io_.write(df, "bucketed",
+                  bucket_spec={"cols": ["surface_norm"], "n": 4})
+        io_.write(with_conv_bucket(df), "partitioned", partition_cols=["conv_bucket"])
+        # a partitioned write of nothing is rewritten by limit(0) into one
+        # empty unpartitioned file
+        io_.write(with_conv_bucket(df.limit(0)), "empty", partition_cols=["conv_bucket"])
+        for table, want in (("bucketed", 120), ("partitioned", 120), ("empty", 0)):
+            assert io_.rows(table) == io_.read(table).count() == want, table
+
+    def test_footer_rows_skip_hidden_entries(self, spark, tmp_path):
+        """A ``stream_mentions``-style directory of ``batch=N`` parts, with
+        the ``_SUCCESS`` markers and ``.crc`` checksums a write leaves and a
+        ``_temporary`` dir of an unfinished task that holds a whole part."""
+        import os
+        import shutil
+
+        from runne_contrastive_ner_spark.sources.tables import data_files, footer_rows
+
+        root = tmp_path / "stream_mentions"
+        for b in range(2):
+            spark.range(10 * (b + 1)).write.parquet(str(root / f"batch={b}"))
+        part = data_files(str(root / "batch=0"))[0]
+        tmp = root / "batch=1" / "_temporary" / "0" / "task_0"
+        os.makedirs(tmp)
+        shutil.copy(part, tmp / os.path.basename(part))
+        names = {n for _, _, fs in os.walk(root) for n in fs}
+        assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+        spark.catalog.refreshByPath(str(root))
+        assert footer_rows(str(root)) == spark.read.parquet(str(root)).count() == 30
 
 
 class TestWriterLock:
